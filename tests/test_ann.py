@@ -320,6 +320,55 @@ def test_ivf_append_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     assert a == b and a
 
 
+def test_ivf_probe_partitioned_runs_one_job(spark, sf_dir, tmp_path):
+    """An unforced probe of any persisted IVF code (raw, PQ, SQ8) runs
+    exactly ONE Spark job: the query collect. Routing is driver-side,
+    the pruned list read takes the sidecar's read-back schema (no
+    footer-inference job, no second collect), and the refine policy
+    resolves from the sidecar's corpus_n (no count job)."""
+    import uuid
+
+    from vectordb_explorations_spark.operators.ann import (
+        ivf_persist_partitioned, ivf_probe_partitioned)
+    from vectordb_explorations_spark.operators.pq import (
+        ivfpq_build, ivfpq_persist_partitioned, ivfpq_probe_partitioned)
+    from vectordb_explorations_spark.operators.sq import (
+        ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned)
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    qs = sample_queries(emb, 5)
+    assigned, cents = ivf_build(emb, num_centroids=8)
+    pq_codes, pq_cents, books = ivfpq_build(emb, num_centroids=8,
+                                            m_subspaces=8, k_codes=16)
+    sq_codes, sq_cents, mins, maxs = ivfsq_build(emb, num_centroids=8)
+    paths = {f: str(tmp_path / f) for f in ("ivf", "ivfpq", "ivfsq")}
+    ivf_persist_partitioned(assigned, paths["ivf"])
+    ivfpq_persist_partitioned(pq_codes, paths["ivfpq"])
+    ivfsq_persist_partitioned(sq_codes, paths["ivfsq"])
+    probes = {
+        "ivf": lambda: ivf_probe_partitioned(
+            spark, paths["ivf"], cents, qs, K, nprobe=4),
+        "ivfpq": lambda: ivfpq_probe_partitioned(
+            spark, paths["ivfpq"], pq_cents, books, qs, K, nprobe=4,
+            refine_with=emb, refine_factor=5),
+        "ivfsq": lambda: ivfsq_probe_partitioned(
+            spark, paths["ivfsq"], sq_cents, mins, maxs, qs, K, nprobe=4,
+            refine_with=emb, refine_factor=5),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for family, probe in probes.items():
+        group = f"ivf-probe-{family}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, family)
+        try:
+            probe()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[family] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {"ivf": 1, "ivfpq": 1, "ivfsq": 1}, jobs
+
+
 def test_hnsw_append_rebuilds_only_touched_shards(spark, sf_dir, tmp_path):
     """Incremental HNSW ingest: after appending a batch, (a) untouched
     shard directories keep their exact files, (b) every appended vector
@@ -832,6 +881,7 @@ def test_ivf_delete_partitioned_lifecycle(spark, sf_dir, tmp_path):
     from vectordb_explorations_spark.operators.ann import (
         ivf_delete_partitioned, ivf_persist_partitioned,
         ivf_probe_partitioned)
+    from vectordb_explorations_spark.operators.pq import _read_corpus_meta
 
     emb = load_table(spark, "embeddings", sf_dir)
     assigned, cents = ivf_build(emb, num_centroids=8)
@@ -873,6 +923,8 @@ def test_ivf_delete_partitioned_lifecycle(spark, sf_dir, tmp_path):
 
     n = ivf_delete_partitioned(spark, path, victims)
     assert n == expected_rows
+    # the sidecar's corpus count drops by the erased ids, not replicas
+    assert _read_corpus_meta(path) == emb.count() - len(victims)
 
     after_idx = spark.read.parquet(path)
     assert after_idx.where(F.col("vec_id").isin(victims)).count() == 0
@@ -901,6 +953,7 @@ def test_ivf_delete_partitioned_lifecycle(spark, sf_dir, tmp_path):
     n2 = ivf_delete_partitioned(spark, path2, [], centroids=cents,
                                 delete_vectors=vict_vecs)
     assert n2 == expected_rows
+    assert _read_corpus_meta(path2) == emb.count() - len(victims)
     a1 = sorted(tuple(r) for r in spark.read.parquet(path)
                 .select("vec_id", "list_id").collect())
     a2 = sorted(tuple(r) for r in spark.read.parquet(path2)

@@ -100,24 +100,38 @@ def test_boilerplate_ngrams_partial_agg(spark, sf_dir):
 
 
 def test_search_merges_single_exchange(spark, sf_dir):
-    """ivf_search's dedupe + ranking share one repartition-on-query
-    exchange (round-6): no ENSURE_REQUIREMENTS hash exchange may appear
-    on the narrow merge rows above the Arrow scoring stage."""
+    """The shared IVF search's replica merge + ranking share one
+    repartition-on-query exchange (round-6) for every code — raw, PQ and
+    SQ8: no ENSURE_REQUIREMENTS hash exchange may appear on the narrow
+    merge rows above the Arrow scoring stage."""
     import re
 
     from vectordb_explorations_spark.operators.ann import ivf_build, ivf_search
     from vectordb_explorations_spark.operators.knn import sample_queries
+    from vectordb_explorations_spark.operators.pq import (ivfpq_build,
+                                                          ivfpq_search)
+    from vectordb_explorations_spark.operators.sq import (ivfsq_build,
+                                                          ivfsq_search)
     from vectordb_explorations_spark.sources import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
+    qs = sample_queries(emb, 5)
     assigned, cents = ivf_build(emb, num_centroids=8)
-    df = ivf_search(assigned, cents, sample_queries(emb, 5), 5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    above_arrow = plan.split("MapInPandas")[0]
-    ensure_hash = re.findall(r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS",
-                             above_arrow)
-    assert not ensure_hash, f"merge re-shuffles: {ensure_hash}"
-    assert "REPARTITION_BY_COL" in above_arrow
+    pq_codes, pq_cents, books = ivfpq_build(emb, num_centroids=8,
+                                            m_subspaces=8, k_codes=16)
+    sq_codes, sq_cents, mins, maxs = ivfsq_build(emb, num_centroids=8)
+    searches = {
+        "ivf": ivf_search(assigned, cents, qs, 5),
+        "ivfpq": ivfpq_search(pq_codes, pq_cents, books, qs, 5),
+        "ivfsq": ivfsq_search(sq_codes, sq_cents, mins, maxs, qs, 5),
+    }
+    for family, df in searches.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        above_arrow = plan.split("MapInPandas")[0]
+        ensure_hash = re.findall(
+            r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS", above_arrow)
+        assert not ensure_hash, f"{family} merge re-shuffles: {ensure_hash}"
+        assert "REPARTITION_BY_COL" in above_arrow, family
 
 
 def test_runtime_bloom_filter_prunes_join_probe(spark, sf_dir):

@@ -173,8 +173,8 @@ def test_layout_corpus_n_fallback_counts_unpruned(spark, tmp_path):
     is job-free and silent."""
     import warnings
 
-    from vectordb_explorations_spark.operators.pq import (
-        _layout_corpus_n, _write_corpus_meta)
+    from vectordb_explorations_spark.operators.ann import (
+        _ivf_write_meta, _layout_corpus_n)
 
     path = str(tmp_path / "nosidecar")
     (spark.range(200).selectExpr("id AS vec_id", "id % 4 AS list_id")
@@ -185,7 +185,7 @@ def test_layout_corpus_n_fallback_counts_unpruned(spark, tmp_path):
     assert n == 100  # 200 rows / replication 2 — the UNPRUNED count
     assert any("_corpus_meta.json" in str(w.message) for w in caught)
 
-    _write_corpus_meta(path, 100)
+    _ivf_write_meta(spark, path, 100)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         assert _layout_corpus_n(spark, path, 2) == 100

@@ -30,7 +30,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from vectordb_explorations_spark.operators.ann import collect_query_batch
+from vectordb_explorations_spark.operators.ann import (
+    _flat_search, _top_k, collect_query_batch)
 from vectordb_explorations_spark.operators.sq import sq_train
 
 BQ_WORD_BITS = 32  # bits packed per BIGINT word: keeps every engine's
@@ -292,17 +293,12 @@ def bq_search(codes_df: DataFrame, thresholds: np.ndarray, queries: DataFrame,
       standard reason vector stores pair 1-bit codes with asymmetric
       distance.
 
-    Either way each partition keeps a local top-n pool, a window merge
-    ranks globally, and with ``refine_with`` the top k*refine_factor
-    candidates re-score exactly through the shared broadcast-candidate
-    refine tail (the corpus never shuffles)."""
-    import pandas as pd
-
+    Either way the scan, merge and optional exact refine are the shared
+    ann._flat_search; scores are reported unrounded as ``bq_dist``."""
     qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([int(r[0]) for r in qrows])
+    qids = [int(r[0]) for r in qrows]
     qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     dim = len(thresholds)
-    n_local = k * refine_factor if refine_with is not None else k
 
     if levels is None:
         qwords = _encode_np(qmat, thresholds)  # (Q, W)
@@ -315,58 +311,22 @@ def bq_search(codes_df: DataFrame, thresholds: np.ndarray, queries: DataFrame,
         delta = c1 - c0                 # (Q, dim)
         qwords = None
 
-    schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("bq_dist", T.DoubleType()),
-    ])
+    def bq_score(pdf):
+        words = np.asarray(list(pdf["words"]), dtype=np.int64)  # (N, W)
+        if levels is not None:
+            bits = _unpack_bits_np(words, dim)          # (N, dim)
+            return base[:, None] + delta @ bits.T       # (Q, N)
+        d = np.zeros((qwords.shape[0], words.shape[0]), dtype=np.int32)
+        for w in range(qwords.shape[1]):
+            x = np.bitwise_xor(qwords[:, w, None], words[None, :, w])
+            d = d + _POP8[x.view(np.uint8).reshape(*x.shape, 8)].sum(
+                -1, dtype=np.int32)
+        return d.astype(np.float64)
 
-    def score(batches):
-        acc_i, acc_d = [], []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            words = np.asarray(list(pdf["words"]), dtype=np.int64)  # (N, W)
-            ids = pdf[id_col].to_numpy()
-            if levels is None:
-                d = np.zeros((qwords.shape[0], words.shape[0]), dtype=np.int32)
-                for w in range(qwords.shape[1]):
-                    x = np.bitwise_xor(qwords[:, w, None], words[None, :, w])
-                    d = d + _POP8[x.view(np.uint8).reshape(*x.shape, 8)].sum(
-                        -1, dtype=np.int32)
-                d = d.astype(np.float64)
-            else:
-                bits = _unpack_bits_np(words, dim)          # (N, dim)
-                d = base[:, None] + delta @ bits.T          # (Q, N)
-            top = min(n_local, d.shape[1])
-            part = np.argpartition(d, top - 1, axis=1)[:, :top]
-            acc_i.append(ids[part])
-            acc_d.append(np.take_along_axis(d, part, axis=1))
-        if not acc_i:
-            return
-        ii = np.concatenate(acc_i, axis=1)
-        dd = np.concatenate(acc_d, axis=1)
-        top = min(n_local, ii.shape[1])
-        part = np.argpartition(dd, top - 1, axis=1)[:, :top]
-        yield pd.DataFrame({
-            qid_col: np.repeat(qids, top),
-            id_col: np.take_along_axis(ii, part, axis=1).ravel(),
-            "bq_dist": np.take_along_axis(dd, part, axis=1).ravel(),
-        })
-
-    local = codes_df.mapInPandas(score, schema=schema)
-    wloc = Window.partitionBy(qid_col).orderBy(
-        F.col("bq_dist").asc(), F.col(id_col).asc())
-    if refine_with is None:
-        return (local.withColumn("rank", F.row_number().over(wloc))
-                .where(F.col("rank") <= k)
-                .select(qid_col, id_col, "bq_dist", "rank"))
-    cand = (local.withColumn("r", F.row_number().over(wloc))
-            .where(F.col("r") <= k * refine_factor)
-            .select(qid_col, id_col))
-    from vectordb_explorations_spark.operators.pq import _exact_refine
-    return _exact_refine(cand, qids, qmat, refine_with, k, qmat.shape[1],
-                         id_col, vec_col, qid_col, qvec_col)
+    return _flat_search(codes_df, qids, qmat, k, bq_score, refine_with,
+                        refine_factor, dist_col="bq_dist", squared=False,
+                        id_col=id_col, vec_col=vec_col, qid_col=qid_col,
+                        qvec_col=qvec_col)
 
 
 def bq_cascade_search(bq_codes: DataFrame, thresholds: np.ndarray,
@@ -462,15 +422,9 @@ def bq_cascade_search(bq_codes: DataFrame, thresholds: np.ndarray,
             })
 
     rescored = with_codes.mapInPandas(stage2, schema=s2_schema)
-    w2 = Window.partitionBy(qid_col).orderBy(
-        F.col("sq_dist").asc(), F.col(id_col).asc())
-    cand2 = (rescored.withColumn("r", F.row_number().over(w2))
-             .where(F.col("r") <= midlist)
-             .select(qid_col, id_col))
-
-    from vectordb_explorations_spark.operators.pq import _exact_refine
-    return _exact_refine(cand2, qids, qmat, refine_with, k, dim,
-                         id_col, vec_col, qid_col, qvec_col)
+    return _top_k(rescored, k, midlist, qids, qmat, refine_with, "sq_dist",
+                  id_col=id_col, vec_col=vec_col, qid_col=qid_col,
+                  qvec_col=qvec_col)
 
 
 def cascade_route(n: int, dim: int) -> str:

@@ -17,10 +17,9 @@ hash-matched (SURVEY §0).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from vectordb_explorations_spark.functions.vectors import l2_distance_sql
 from vectordb_explorations_spark.operators import ann as ANN
 from vectordb_explorations_spark.operators.ann import collect_query_batch
 
@@ -36,7 +35,7 @@ from vectordb_explorations_spark.operators.ann import collect_query_batch
 # resolves from the code-table size; a fixed rf below the fraction
 # warns loudly instead of silently degrading (the LSH/BQ pattern).
 PQ_REFINE_FRACTION = 300 / 200_000     # rf=30 * k=10 at the 200k anchor
-IVFPQ_REFINE_FRACTION = 100 / 200_000  # rf=10 * k=10 (within probed lists)
+IVFPQ_REFINE_FRACTION = ANN.IVF_REFINE_FRACTION  # shared by every IVF code
 
 
 def adaptive_refine_factor(n: int, k: int, fraction: float,
@@ -57,16 +56,11 @@ _CORPUS_N_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 def invalidate_corpus_n(codes_df: DataFrame | None = None) -> None:
     """Drop the memoized corpus count for ``codes_df`` (or ALL entries
-    when called with no argument). The memo is per-DataFrame-lifetime
-    by design (job-free steady-state serving), and the engine's own
-    append helpers clear it automatically. Note the deeper contract: a
-    parquet-backed DataFrame SNAPSHOTS its file listing at creation, so
-    a long-lived object over a growing path reports the old N (and old
-    rows!) even after invalidation — growing-path serving must re-read
-    the path per probe (the ``*_probe_partitioned`` helpers do, and
-    resolve N from the sidecar) or pass ``corpus_n=``. This hook covers
-    sources whose listing CAN refresh under one object (catalog tables
-    after REFRESH TABLE, in-memory unions rebound to the same name)."""
+    when called with no argument) — for sources whose listing CAN
+    refresh under one object (catalog tables after REFRESH TABLE,
+    in-memory unions rebound to the same name); the staleness contract
+    is :func:`_corpus_rows`'s. The engine's own append and delete
+    helpers call it automatically."""
     if codes_df is None:
         _CORPUS_N_CACHE.clear()
     else:
@@ -85,7 +79,8 @@ def _corpus_rows(codes_df: DataFrame, replication: int) -> int:
     ``*_probe_partitioned`` helpers do) or pass ``corpus_n=``; appends
     made through the engine's own helpers (``*_append_partitioned``)
     clear this cache themselves, and :func:`invalidate_corpus_n` does it
-    manually.
+    manually. Even after invalidation, a long-lived object over a growing
+    path reports the old N (and old rows!).
 
     ``replication`` is the known per-vector row multiplicity (IVF-family
     code tables carry assign_n rows per vector — counting raw rows would
@@ -174,13 +169,32 @@ def pq_train(vectors: DataFrame, m_subspaces: int = 8, k_codes: int = 32,
               vectors.select(id_col, vec_col)
               .orderBy(F.xxhash64(F.col(id_col)), id_col)
               .limit(sample_n).select(vec_col).collect()]
-    mat = np.asarray(sample, dtype=np.float64)
-    dim = mat.shape[1]
-    assert dim % m_subspaces == 0, (dim, m_subspaces)
-    dsub = dim // m_subspaces
+    return _pq_fit(np.asarray(sample, dtype=np.float64), m_subspaces,
+                   k_codes, seed)
+
+
+def _pq_fit(mat: np.ndarray, m: int, k_codes: int,
+            seed: int) -> np.ndarray:
+    """(m, k, dsub) codebooks: one seeded k-means per subspace of the
+    (n, dim) training sample (raw vectors or IVF residuals)."""
+    assert mat.shape[1] % m == 0, (mat.shape[1], m)
+    dsub = mat.shape[1] // m
     return np.stack([
         _kmeans_1d(mat[:, s * dsub:(s + 1) * dsub], k_codes, seed + s)
-        for s in range(m_subspaces)])
+        for s in range(m)])
+
+
+def _pq_assign(mat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(N, m) nearest-code ids per subspace — the argmin GEMM shared by
+    pq_encode and _ivfpq_encode."""
+    m, _, dsub = codebooks.shape
+    codes = np.empty((len(mat), m), dtype=np.int32)
+    for s in range(m):
+        sub = mat[:, s * dsub:(s + 1) * dsub]
+        # ||x - c||² argmin via -2xc + ||c||² (||x||² constant in argmin)
+        d = -2.0 * sub @ codebooks[s].T + (codebooks[s] ** 2).sum(-1)
+        codes[:, s] = np.argmin(d, axis=1)
+    return codes
 
 
 def pq_encode(vectors: DataFrame, codebooks: np.ndarray,
@@ -190,7 +204,6 @@ def pq_encode(vectors: DataFrame, codebooks: np.ndarray,
     representation that replaces the vectors in the scan."""
     import pandas as pd
 
-    m, k, dsub = codebooks.shape
     schema = T.StructType([
         T.StructField(id_col, T.LongType()),
         T.StructField("codes", T.ArrayType(T.IntegerType())),
@@ -200,47 +213,12 @@ def pq_encode(vectors: DataFrame, codebooks: np.ndarray,
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for s in range(m):
-                sub = mat[:, s * dsub:(s + 1) * dsub]
-                # ||x - c||² argmin via -2xc + ||c||² (||x||² constant in argmin)
-                d = -2.0 * sub @ codebooks[s].T + (codebooks[s] ** 2).sum(-1)
-                codes[:, s] = np.argmin(d, axis=1)
+            codes = _pq_assign(
+                np.asarray(list(pdf[vec_col]), dtype=np.float64), codebooks)
             yield pd.DataFrame({id_col: pdf[id_col],
                                 "codes": list(codes.tolist())})
 
     return vectors.select(id_col, vec_col).mapInPandas(enc, schema=schema)
-
-
-def _exact_refine(cand: DataFrame, qids, qmat: np.ndarray,
-                  refine_with: DataFrame, k: int, dim: int,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  qid_col: str = "query_id",
-                  qvec_col: str = "query_vec") -> DataFrame:
-    """Shared exact-refine tail for every compressed-index search (PQ,
-    IVF-PQ, SQ8): re-score the bounded candidate set against the original
-    vectors and re-rank. Broadcast the CANDIDATE side (bounded at
-    Q * k * refine_factor rows by construction) so the vector corpus never
-    shuffles for the re-score — without the hint this planned as a
-    sort-merge join (2 extra exchanges + sorts, the round-4 PQ latency
-    gap), and at 100 TB AQE would try to broadcast the corpus
-    statistics-blind. ``dim`` is statically known from the index, so the
-    distance unrolls into codegen."""
-    spark = refine_with.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, qmat)],
-        f"{qid_col} long, {qvec_col} array<double>")
-    scored = (refine_with.select(id_col, vec_col)
-              .join(F.broadcast(cand), id_col)
-              .join(F.broadcast(qdf), qid_col)
-              .withColumn("dist", F.round(
-                  F.expr(l2_distance_sql(vec_col, qvec_col, dim)), 6)))
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, "dist", "rank"))
 
 
 def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
@@ -251,8 +229,7 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
               corpus_n: int | None = None) -> DataFrame:
     """ADC search: per query, the (m, k) lookup table of exact
     query-subvector→code distances broadcasts in the UDF closure; scoring a
-    vector is m table lookups. Local per-partition top-k keeps the shuffle
-    at candidates × queries, then a window merge ranks globally.
+    vector is m table lookups (scan, merge and refine: ann._flat_search).
 
     With ``refine_with`` (the original vectors), the top candidates×
     ``refine_factor`` are re-scored exactly and re-ranked — the standard
@@ -261,15 +238,13 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
     probe measured the fixed-rf decay: 0.958 -> 0.812 at rf=30); a
     fixed rf below the fraction warns (see adaptive_refine_factor).
     """
-    import pandas as pd
-
     if refine_with is not None:
         refine_factor = _resolve_refine_factor(
             refine_factor, codes_df, k, PQ_REFINE_FRACTION, "pq",
             corpus_n=corpus_n)
     m, kc, dsub = codebooks.shape
     qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([int(r[0]) for r in qrows])
+    qids = [int(r[0]) for r in qrows]
     qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     # (Q, m, kc) squared-distance LUTs
     luts = np.stack([
@@ -277,61 +252,17 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
           - codebooks[s][None, :, :]) ** 2).sum(-1)
         for s in range(m)], axis=1)
 
-    n_local = k * refine_factor if refine_with is not None else k
-    schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
+    def adc(pdf):
+        codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (N, m)
+        # (Q, N): sum over subspaces of LUT[q, s, codes[n, s]]
+        d2 = np.zeros((len(qids), len(codes)))
+        for s in range(m):
+            d2 += luts[:, s, :][:, codes[:, s]]
+        return d2
 
-    def score(batches):
-        # Accumulate per-BATCH top-n_local and emit one per-PARTITION
-        # top-n_local at close: emitting per batch multiplied the window
-        # prefilter's shuffle input by the batch count (10x at sf0.1 with
-        # 10k-row Arrow batches — the round-4 PQ latency hot spot).
-        acc_i, acc_d = [], []  # per-batch (top, ids) candidate pools
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (N, m)
-            ids = pdf[id_col].to_numpy()
-            # (Q, N): sum over subspaces of LUT[q, s, codes[n, s]]
-            d2 = np.zeros((len(qids), len(codes)))
-            for s in range(m):
-                d2 += luts[:, s, :][:, codes[:, s]]
-            top = min(n_local, len(codes))
-            part = np.argpartition(d2, top - 1, axis=1)[:, :top]  # (Q, top)
-            acc_i.append(ids[part])
-            acc_d.append(np.take_along_axis(d2, part, axis=1))
-        if not acc_i:
-            return
-        ii = np.concatenate(acc_i, axis=1)  # (Q, sum_tops)
-        dd = np.concatenate(acc_d, axis=1)
-        top = min(n_local, ii.shape[1])
-        part = np.argpartition(dd, top - 1, axis=1)[:, :top]
-        sel_i = np.take_along_axis(ii, part, axis=1)
-        sel_d = np.sqrt(np.take_along_axis(dd, part, axis=1))
-        yield pd.DataFrame({
-            qid_col: np.repeat(qids, top),
-            id_col: sel_i.ravel(),
-            "adc_dist": sel_d.ravel(),
-        })
-
-    local = codes_df.mapInPandas(score, schema=schema)
-    if refine_with is None:
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("adc_dist").asc(), F.col(id_col).asc())
-        return (local.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(qid_col, id_col,
-                        F.round("adc_dist", 6).alias("dist"), "rank"))
-    wloc = Window.partitionBy(qid_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc())
-    cand = (local.withColumn("r", F.row_number().over(wloc))
-            .where(F.col("r") <= k * refine_factor)
-            .select(qid_col, id_col))
-    return _exact_refine(cand, qids, qmat, refine_with, k, m * dsub,
-                         id_col, vec_col, qid_col, qvec_col)
+    return ANN._flat_search(codes_df, qids, qmat, k, adc, refine_with,
+                            refine_factor, id_col=id_col, vec_col=vec_col,
+                            qid_col=qid_col, qvec_col=qvec_col)
 
 
 # ---------------- IVF-PQ composite (route coarse, ADC-scan residuals) ---
@@ -350,10 +281,8 @@ def ivfpq_build(vectors: DataFrame, num_centroids: int = 16,
     assignment; residual codebooks train on a bounded hash-ordered driver
     sample of residuals; encode is one Arrow pass over the assigned rows.
     Returns (codes_df(vec_id, list_id, codes), centroids, codebooks)."""
-    from vectordb_explorations_spark.operators.ann import ivf_build
-
-    assigned, centroids = ivf_build(vectors, num_centroids, seed=seed,
-                                    vec_col=vec_col, id_col=id_col)
+    assigned, centroids = ANN.ivf_build(vectors, num_centroids, seed=seed,
+                                        vec_col=vec_col, id_col=id_col)
     # residual fit sample: draw hash-ordered RAW vectors (plans as
     # TakeOrderedAndProject on the narrow scan) and assign the sample
     # driver-side against the already-fitted centroids — sampling from
@@ -370,12 +299,7 @@ def ivfpq_build(vectors: DataFrame, num_centroids: int = 16,
     near = np.argsort(d_s, axis=1)[:, :an]  # nearest-first, as ivf_assign
     resid = np.concatenate([smat - centroids[near[:, j]]
                             for j in range(an)])
-    dim = resid.shape[1]
-    assert dim % m_subspaces == 0, (dim, m_subspaces)
-    dsub = dim // m_subspaces
-    codebooks = np.stack([
-        _kmeans_1d(resid[:, s * dsub:(s + 1) * dsub], k_codes, seed + s)
-        for s in range(m_subspaces)])
+    codebooks = _pq_fit(resid, m_subspaces, k_codes, seed)
 
     codes_df = _ivfpq_encode(assigned, centroids, codebooks,
                              id_col, vec_col)
@@ -392,7 +316,6 @@ def _ivfpq_encode(assigned: DataFrame, centroids: np.ndarray,
     centroids/codebooks would produce."""
     import pandas as pd
 
-    dsub = codebooks.shape[2]
     bc_cent = assigned.sparkSession.sparkContext.broadcast(centroids)
     bc_books = assigned.sparkSession.sparkContext.broadcast(codebooks)
     schema = T.StructType([
@@ -403,24 +326,50 @@ def _ivfpq_encode(assigned: DataFrame, centroids: np.ndarray,
 
     def enc(batches):
         C, B = bc_cent.value, bc_books.value
-        m = B.shape[0]
         for pdf in batches:
             if pdf.empty:
                 continue
             X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
             L = pdf["list_id"].to_numpy(dtype=np.int64)
-            R = X - C[L]
-            codes = np.empty((len(R), m), dtype=np.int32)
-            for s in range(m):
-                sub = R[:, s * dsub:(s + 1) * dsub]
-                d = -2.0 * sub @ B[s].T + (B[s] ** 2).sum(-1)
-                codes[:, s] = np.argmin(d, axis=1)
+            codes = _pq_assign(X - C[L], B)
             yield pd.DataFrame({id_col: pdf[id_col],
                                 "list_id": pdf["list_id"],
                                 "codes": list(codes.tolist())})
 
     return (assigned.select(id_col, vec_col, "list_id")
             .mapInPandas(enc, schema=schema))
+
+
+def _pq_code(centroids: np.ndarray, codebooks: np.ndarray) -> ANN.IVFCode:
+    """IVF-PQ rows store residual (vec - list centroid) PQ codes; a
+    (query, probed list) pair scores against the LUT of the residual
+    query (q - centroid). The LUT block is Q x nprobe x (m, k) doubles —
+    megabytes for a 100-query batch — and ships in the UDF closure;
+    probed code rows never carry vectors."""
+    m, kc, dsub = codebooks.shape
+    marange = np.arange(m)
+
+    def bind(qmat, probe):
+        luts = np.stack([
+            np.stack([((r[s * dsub:(s + 1) * dsub][None, :]
+                        - codebooks[s]) ** 2).sum(-1)
+                      for s in range(m)])  # (m, kc)
+            for r in (qmat[qi] - centroids[li]
+                      for qi in range(len(qmat)) for li in probe[qi])])
+
+        def decode(col):
+            return (np.asarray(list(col), dtype=np.int64),)  # (N, m)
+
+        def kernel(blk, qis, pairs):
+            # d2[q, n] = sum_s LUT[pair[q], s, c[n, s]] — same gather +
+            # length-m reduce as the joined shape: bit-equal distances
+            d2 = luts[pairs][:, marange[None, :], blk[0]].sum(-1)
+            return np.sqrt(np.maximum(d2, 0.0))
+        return decode, kernel
+
+    def encode(assigned, id_col, vec_col):
+        return _ivfpq_encode(assigned, centroids, codebooks, id_col, vec_col)
+    return ANN.IVFCode("codes", "ivfpq", encode, bind)
 
 
 def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
@@ -432,237 +381,35 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
                  qvec_col: str = "query_vec",
                  corpus_n: int | None = None) -> DataFrame:
     """Probe the nprobe nearest lists per query, ADC-score their residual
-    codes against per-(query, list) LUTs built on the residual query
-    (q - centroid), then merge + optional broadcast-candidate exact
-    refine. The LUT block is Q x nprobe x (m, k) doubles — megabytes for a
-    100-query batch — and ships in the UDF closure; probed code rows never
-    carry vectors, so the Arrow stage streams 64-byte codes and emits one
-    per-partition top-n pool of narrow rows.
-
-    ``refine_factor='auto'`` / the fixed-rf warning follow pq_search's
-    corpus-adaptive policy (1M probe: 0.878 at rf=10 -> 0.961 at the
-    resolved rf=50)."""
-    import pandas as pd
-
-    if refine_with is not None:
-        refine_factor = _resolve_refine_factor(
-            refine_factor, codes_df, k, IVFPQ_REFINE_FRACTION, "ivfpq",
-            corpus_n=corpus_n, replication=ANN.IVF_ASSIGN_N)
-    m, kc, dsub = codebooks.shape
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [int(r[0]) for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)  # (Q, C)
-    nn = min(nprobe, centroids.shape[0])
-    luts, by_list = [], {}
-    for qi, qid in enumerate(qids):
-        order = np.lexsort((np.arange(centroids.shape[0]), cdist[qi]))[:nn]
-        for li in order:
-            r = qmat[qi] - centroids[li]  # residual query for this list
-            lut = np.stack([
-                ((r[s * dsub:(s + 1) * dsub][None, :]
-                  - codebooks[s]) ** 2).sum(-1)
-                for s in range(m)])  # (m, kc)
-            by_list.setdefault(int(li), []).append((qid, len(luts)))
-            luts.append(lut)
-    luts = np.stack(luts)  # (Q*nprobe, m, kc)
-    # The probe map (list -> probing queries + their LUT rows) rides the
-    # UDF closure — Q x nprobe entries, kilobytes. The earlier probe-frame
-    # broadcast JOIN replicated every probed code row per probing query
-    # (measured 12.6x at 1M: 25.2M joined rows from a 2M-row code table;
-    # the ADC stage alone was 7.5 of 8.4 s/batch100) — codes now stream
-    # through Arrow ONCE and each list's rows score against a (nq, m)
-    # LUT gather.
-    list_qids = {li: np.asarray([q for q, _ in v], dtype=np.int64)
-                 for li, v in by_list.items()}
-    list_lix = {li: np.asarray([x for _, x in v], dtype=np.int64)
-                for li, v in by_list.items()}
-    scan = (codes_df.where(F.col("list_id").isin(sorted(by_list)))
-            .select("list_id", id_col, "codes"))
-
-    n_local = k * refine_factor if refine_with is not None else k
-    out_schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
-    marange = np.arange(m)
-
-    def score2(batches):
-        # Accumulate per-PARTITION and emit once (pq_search's pattern —
-        # per-batch emission multiplies the merge shuffle's input by the
-        # batch count, the measured round-4 ADC hot spot).
-        accs = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (N, m)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li in np.unique(lists):
-                sel = lists == li
-                c, sids = codes[sel], ids[sel]
-                qv, lixv = list_qids[int(li)], list_lix[int(li)]
-                # d2[q, n] = sum_s LUT[lix[q], s, c[n, s]] — same gather +
-                # length-m reduce as the joined shape: bit-equal
-                # distances. Chunk the query axis so the (nq, n, m)
-                # gather temp stays bounded (~32 x batch x m doubles)
-                # even when every query probes the same hot list.
-                for q0 in range(0, len(qv), 32):
-                    lsel = luts[lixv[q0:q0 + 32]]
-                    d2 = lsel[:, marange[None, :], c].sum(-1)  # (nq', n)
-                    dist = np.sqrt(np.maximum(d2, 0.0))
-                    for row, qid in enumerate(qv[q0:q0 + 32]):
-                        top = np.lexsort((sids, dist[row]))[:n_local]
-                        accs.append((qid, sids[top], dist[row][top]))
-        if not accs:
-            return
-        allf = pd.DataFrame({
-            qid_col: np.concatenate(
-                [np.full(len(i), q, dtype=np.int64) for q, i, _ in accs]),
-            id_col: np.concatenate([i for _, i, _ in accs]),
-            "adc_dist": np.concatenate([d for _, _, d in accs]),
-        })
-        # min-dedupe replicas (assign_n puts a vector in 2 lists with
-        # DIFFERENT residual distances — sorted-ascending keep-first
-        # keeps the closer-list estimate), then bound the pool
-        yield (allf.sort_values([qid_col, "adc_dist", id_col])
-               .drop_duplicates([qid_col, id_col])
-               .groupby(qid_col, sort=False).head(n_local))
-
-    local = scan.mapInPandas(score2, schema=out_schema)
-    # Cross-partition replica dedupe must keep MIN(adc_dist), not an
-    # arbitrary row: unlike ivf_search (exact dists — replicas tie),
-    # IVF-PQ replicas carry different per-list residual estimates, so a
-    # dropDuplicates pick would be shuffle-order-nondeterministic and
-    # could discard the closer-list estimate. hash(qid) satisfies the
-    # (qid, id) grouped agg AND the window, so one exchange serves both.
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc())
-    ranked = (local.repartition(F.col(qid_col))
-              .groupBy(qid_col, id_col)
-              .agg(F.min("adc_dist").alias("adc_dist"))
-              .withColumn("rank", F.row_number().over(w)))
-    if refine_with is None:
-        return (ranked.where(F.col("rank") <= k)
-                .select(qid_col, id_col,
-                        F.round("adc_dist", 6).alias("dist"), "rank"))
-    cand = (ranked.where(F.col("rank") <= n_local)
-            .select(qid_col, id_col))
-    return _exact_refine(cand, qids, qmat, refine_with, k, m * dsub,
-                         id_col, vec_col, qid_col, qvec_col)
+    codes, merge, optionally exact-refine — the PQ binding of the shared
+    IVF path (``ann._ivf_search``, which also documents the refine
+    policy)."""
+    return ANN._ivf_search(
+        codes_df, *ANN._ivf_batch(queries, centroids, nprobe, qid_col,
+                                  qvec_col),
+        k, _pq_code(centroids, codebooks), refine_with, refine_factor,
+        corpus_n, id_col, vec_col, qid_col, qvec_col)
 
 
 # ---- partitioned serving for the compressed composite (round 9) ----
-# IVF and sharded HNSW already had hive-partitioned serving; the
-# COMPRESSED router family did not — yet at 100 TB it is exactly the
-# configuration you'd serve (probe-pruned file listing over 16-byte
-# codes instead of 256-byte vectors: the scan that survives is
-# nprobe/C of the INDEX bytes, already 16x smaller than the corpus).
-
-def _probed_union(centroids: np.ndarray, queries: DataFrame, nprobe: int,
-                  qid_col: str = "query_id",
-                  qvec_col: str = "query_vec") -> list[int]:
-    """Driver-side union of every query's nprobe nearest lists — the
-    literal isin filter that partition-prunes a hive list_id layout.
-    Same lexsort tie-break as ivf_search's probe selection."""
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)
-    nn = min(nprobe, centroids.shape[0])
-    return sorted({int(li)
-                   for qi in range(len(qrows))
-                   for li in np.lexsort((np.arange(centroids.shape[0]),
-                                         cdist[qi]))[:nn]})
-
-
-def _write_corpus_meta(path: str, corpus_n: int) -> None:
-    """Persist the corpus size next to the index — THE build-time
-    metadata the adaptive refine policy resolves from, so serving never
-    schedules a count job (and never mis-counts the assign_n-replicated
-    code rows)."""
-    import json
-    import os
-    with open(os.path.join(path, "_corpus_meta.json"), "w") as f:
-        json.dump({"corpus_n": int(corpus_n)}, f)
-
-
-def _layout_corpus_n(spark, path: str, replication: int) -> int:
-    """Corpus N for a persisted layout: the sidecar when present
-    (job-free), else ONE count over the UNPRUNED layout. The fallback
-    must never count a probe-pruned frame — that badly underestimates N
-    and resolves ``refine_factor='auto'`` too small (silently degraded
-    recall) while pricing the fixed-rf warning against the wrong N."""
-    n = _read_corpus_meta(path)
-    if n is not None:
-        return n
-    import warnings
-    warnings.warn(
-        f"layout at {path} has no _corpus_meta.json sidecar — resolving "
-        f"auto policies with a one-off count over the full layout; "
-        f"persist via the engine's build/append helpers to make probe "
-        f"policy resolution job-free.", RuntimeWarning, stacklevel=3)
-    return spark.read.parquet(path).count() // max(1, int(replication))
-
+# At 100 TB this is the configuration you'd serve: probe-pruned file
+# listing over 16-byte codes instead of 256-byte vectors, so the scan
+# that survives is nprobe/C of the INDEX bytes, already 16x smaller than
+# the corpus. Layout, sidecar and probe are the shared IVF ones (ann.py).
 
 def _read_corpus_meta(path: str) -> int | None:
-    import json
-    import os
-    p = os.path.join(path, "_corpus_meta.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return int(json.load(f)["corpus_n"])
-    return None
+    """The corpus count of a persisted IVF layout's sidecar (None when
+    absent), read through the active session's Hadoop FS."""
+    from pyspark.sql import SparkSession
+    meta = ANN._ivf_meta(SparkSession.active(), path)
+    return None if meta is None else int(meta["corpus_n"])
 
 
 def ivfpq_persist_partitioned(codes_df: DataFrame, path: str,
                               id_col: str = "vec_id") -> None:
-    """Persist IVF-PQ codes hive-partitioned by list_id: each inverted
-    list of m-byte codes is its own directory, so a probe's literal
-    ``list_id IN (...)`` prunes unprobed lists at the FILE LISTING.
-    Writes the corpus row count (distinct ids — the replication-corrected
-    N) as sidecar metadata for job-free refine-policy resolution."""
-    (codes_df.select(id_col, "codes", "list_id")
-     .write.mode("overwrite").partitionBy("list_id").parquet(path))
-    _write_corpus_meta(
-        path, codes_df.select(id_col).distinct().count())
-
-
-def _append_codes_partitioned(path: str, codes: DataFrame,
-                              assign_rows_per_vec: int,
-                              id_col: str = "vec_id") -> None:
-    """Shared hive-append + sidecar-advance for the compressed layouts
-    (IVF-PQ and IVF-SQ8 appends differ only in how ``codes`` was made).
-    The corpus increment rides the SAME write job as an observed row
-    count — ivf_assign emits exactly ``assign_rows_per_vec`` rows per
-    batch vector, so no second source scan and no distinct shuffle.
-
-    Contract: batch ids are NEW to the layout and unique within the
-    batch (the ingest semantics every append path here shares);
-    re-ingesting existing ids would inflate the sidecar N — corrections
-    go through the batch rebuild. The parquet write -> meta write pair
-    is not atomic: a crash between them undercounts N until the next
-    append or rebuild; the streaming wrappers' epoch markers make
-    replays no-ops, a full rebuild recovers anything else."""
-    from pyspark.sql import Observation
-
-    from vectordb_explorations_spark.sources.sinks import V1_COMMITTER
-
-    obs = Observation()
-    (codes.observe(obs, F.count(F.lit(1)).alias("rows"))
-     .select(id_col, "codes", "list_id")
-     .write.mode("append").options(**V1_COMMITTER)
-     .partitionBy("list_id").parquet(path))
-    inc = int(obs.get.get("rows") or 0) // max(1, assign_rows_per_vec)
-    old_n = _read_corpus_meta(path) or 0
-    _write_corpus_meta(path, old_n + inc)
-    # The layout just grew: any memoized count over a pre-existing
-    # DataFrame of it is stale. Appends are rare next to searches, so
-    # clearing the whole memo (one re-count per live index, worst case)
-    # beats a silently wrong auto policy.
-    invalidate_corpus_n()
+    """Persist IVF-PQ codes as the shared IVF layout: each inverted list
+    of m-byte codes is its own directory, plus the sidecar."""
+    ANN._ivf_persist(codes_df, path, "codes", id_col)
 
 
 def ivfpq_append_partitioned(path: str, centroids: np.ndarray,
@@ -670,25 +417,11 @@ def ivfpq_append_partitioned(path: str, centroids: np.ndarray,
                              new_vectors: DataFrame,
                              id_col: str = "vec_id",
                              vec_col: str = "embedding") -> None:
-    """Incremental IVF-PQ maintenance: assign + encode ONLY the new batch
-    against the FROZEN coarse centroids and residual codebooks, append
-    into the hive layout (hive append is partition-local — new files land
-    only in the list directories the batch touches), and advance the
-    sidecar corpus count so ``refine_factor='auto'`` keeps resolving
-    against the true N without a count job. O(batch) in ONE source pass
-    (the sidecar increment is an observed metric on the write job), never
-    a rebuild; appended codes are bit-identical to a rebuild's because
-    build and append share ``_ivfpq_encode``. Codebook/centroid drift is
-    handled by periodic re-train + full rewrite (the standard IVF
-    maintenance split, same as ivf_append_partitioned); id/atomicity
-    contract in ``_append_codes_partitioned``."""
-    from vectordb_explorations_spark.operators.ann import ivf_assign
-
-    an = max(1, min(ANN.IVF_ASSIGN_N, centroids.shape[0]))
-    assigned = ivf_assign(new_vectors.select(id_col, vec_col), centroids,
-                          assign_n=an, vec_col=vec_col)
-    codes = _ivfpq_encode(assigned, centroids, codebooks, id_col, vec_col)
-    _append_codes_partitioned(path, codes, an, id_col)
+    """Append a new batch to the IVF-PQ layout against the FROZEN
+    centroids and residual codebooks (``ann._ivf_append``)."""
+    ANN._ivf_append(path, centroids, new_vectors,
+                    _pq_code(centroids, codebooks), id_col=id_col,
+                    vec_col=vec_col)
 
 
 def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
@@ -700,19 +433,9 @@ def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             vec_col: str = "embedding",
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
-    """Serve IVF-PQ from the hive layout: driver-side probed-list union
-    as a literal isin (PartitionFilters pruning — unprobed list
-    directories are never listed, let alone read), then the standard
-    ivfpq_search over the pruned frame; its closure probe map restricts
-    each query to ITS lists within the union. The refine policy
-    resolves from the sidecar corpus metadata — no count job."""
-    probed = _probed_union(centroids, queries, nprobe, qid_col, qvec_col)
-    codes = (spark.read.parquet(path)
-             .where(F.col("list_id").isin(probed)))
-    return ivfpq_search(codes, centroids, codebooks, queries, k,
-                        nprobe=nprobe, refine_with=refine_with,
-                        refine_factor=refine_factor,
-                        id_col=id_col, vec_col=vec_col,
-                        qid_col=qid_col, qvec_col=qvec_col,
-                        corpus_n=_layout_corpus_n(
-                            spark, path, ANN.IVF_ASSIGN_N))
+    """Serve IVF-PQ from the hive layout: the shared pruned probe
+    (``ann._ivf_probe``) over ADC distances."""
+    return ANN._ivf_probe(spark, path, centroids, queries, k, nprobe,
+                          _pq_code(centroids, codebooks), refine_with,
+                          refine_factor, id_col, vec_col, qid_col,
+                          qvec_col)

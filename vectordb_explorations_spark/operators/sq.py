@@ -22,10 +22,9 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql import types as T
 
 from vectordb_explorations_spark.functions.rounding import r6, round6
-from vectordb_explorations_spark.functions.vectors import l2_distance
+from vectordb_explorations_spark.operators import ann as ANN
 from vectordb_explorations_spark.operators.ann import collect_query_batch
 
 SQ_LEVELS = 255  # codes 0..255
@@ -91,72 +90,24 @@ def sq_search(codes_df: DataFrame, mins: np.ndarray, maxs: np.ndarray,
               refine_with: DataFrame | None = None, refine_factor: int = 5,
               id_col: str = "vec_id", vec_col: str = "embedding",
               qid_col: str = "query_id", qvec_col: str = "query_vec") -> DataFrame:
-    """Approximate search on the dequantized codes: per partition, Arrow
-    batches dequantize (codes * scale + min) and score all queries in one
-    GEMM, keeping a per-partition top-n pool; a window merge ranks
-    globally; with ``refine_with`` the top k*refine_factor candidates are
-    re-scored exactly via a broadcast-candidate join (same shape as
-    pq_search — candidates bounded at Q*k*refine_factor, the corpus never
-    shuffles)."""
-    import pandas as pd
-
+    """Approximate search on the dequantized codes: each Arrow batch
+    dequantizes (codes * scale + min) and scores all queries in one GEMM;
+    the per-partition pools, window merge and optional exact refine are
+    ann._flat_search's (same shape as pq_search)."""
     scales = _scales(mins, maxs)
     qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([int(r[0]) for r in qrows])
+    qids = [int(r[0]) for r in qrows]
     qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)  # (Q, dim)
     qsq = (qmat ** 2).sum(-1)  # (Q,)
 
-    n_local = k * refine_factor if refine_with is not None else k
-    schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("sq_dist", T.DoubleType()),
-    ])
+    def sq_d2(pdf):
+        deq = np.asarray(list(pdf["codes"]), dtype=np.float64) * scales + mins
+        # (Q, N) squared distances via ||q||^2 - 2 q.deq + ||deq||^2
+        return qsq[:, None] - 2.0 * qmat @ deq.T + (deq ** 2).sum(-1)
 
-    def score(batches):
-        acc_i, acc_d = [], []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.float64)  # (N, dim)
-            deq = codes * scales + mins
-            ids = pdf[id_col].to_numpy()
-            # (Q, N) squared distances via ||q||^2 - 2 q.deq + ||deq||^2
-            d2 = qsq[:, None] - 2.0 * qmat @ deq.T + (deq ** 2).sum(-1)
-            top = min(n_local, d2.shape[1])
-            part = np.argpartition(d2, top - 1, axis=1)[:, :top]
-            acc_i.append(ids[part])
-            acc_d.append(np.take_along_axis(d2, part, axis=1))
-        if not acc_i:
-            return
-        ii = np.concatenate(acc_i, axis=1)
-        dd = np.concatenate(acc_d, axis=1)
-        top = min(n_local, ii.shape[1])
-        part = np.argpartition(dd, top - 1, axis=1)[:, :top]
-        sel_i = np.take_along_axis(ii, part, axis=1)
-        sel_d = np.sqrt(np.maximum(np.take_along_axis(dd, part, axis=1), 0.0))
-        yield pd.DataFrame({
-            qid_col: np.repeat(qids, top),
-            id_col: sel_i.ravel(),
-            "sq_dist": sel_d.ravel(),
-        })
-
-    local = codes_df.mapInPandas(score, schema=schema)
-    if refine_with is None:
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("sq_dist").asc(), F.col(id_col).asc())
-        return (local.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(qid_col, id_col,
-                        F.round("sq_dist", 6).alias("dist"), "rank"))
-    wloc = Window.partitionBy(qid_col).orderBy(
-        F.col("sq_dist").asc(), F.col(id_col).asc())
-    cand = (local.withColumn("r", F.row_number().over(wloc))
-            .where(F.col("r") <= k * refine_factor)
-            .select(qid_col, id_col))
-    from vectordb_explorations_spark.operators.pq import _exact_refine
-    return _exact_refine(cand, qids, qmat, refine_with, k, qmat.shape[1],
-                         id_col, vec_col, qid_col, qvec_col)
+    return ANN._flat_search(codes_df, qids, qmat, k, sq_d2, refine_with,
+                            refine_factor, id_col=id_col, vec_col=vec_col,
+                            qid_col=qid_col, qvec_col=qvec_col)
 
 
 def sq_quantization_audit(vectors: DataFrame,
@@ -224,12 +175,8 @@ FROM c GROUP BY dim_id ORDER BY dim_id
 """
 
 # ---- IVF-SQ8: coarse k-means routing over scalar-quantized lists ----
-# The remaining cell of the routing x quantization matrix (IVF-PQ exists,
-# pq.py:276; flat SQ8 exists above): FAISS's IVF<n>,SQ8 composite. Same
-# decay family as every fixed-shortlist search, so refine_factor='auto'
-# reuses pq.py's corpus-adaptive policy with IVF-PQ's within-probed-lists
-# anchor (rf=10 * k=10 at the 200k calibration corpus).
-IVFSQ_REFINE_FRACTION = 100 / 200_000
+# FAISS's IVF<n>,SQ8 composite; its refine anchor is every IVF code's.
+IVFSQ_REFINE_FRACTION = ANN.IVF_REFINE_FRACTION
 
 
 def ivfsq_build(vectors: DataFrame, num_centroids: int = 16, seed: int = 42,
@@ -249,15 +196,46 @@ def ivfsq_build(vectors: DataFrame, num_centroids: int = 16, seed: int = 42,
     ivf_build's sampled k-means + distributed GEMM assignment, one extents
     agg, one codegen encode projection — no extra corpus pass vs IVF.
     """
-    from vectordb_explorations_spark.operators.ann import ivf_build
-
-    assigned, centroids = ivf_build(vectors, num_centroids=num_centroids,
-                                    seed=seed, vec_col=vec_col,
-                                    id_col=id_col)
+    assigned, centroids = ANN.ivf_build(vectors, num_centroids=num_centroids,
+                                        seed=seed, vec_col=vec_col,
+                                        id_col=id_col)
     mins, maxs = sq_train(vectors, dim, vec_col)
     codes = sq_encode(assigned, mins, maxs, id_col=id_col, vec_col=vec_col,
                       keep_cols=("list_id",))
     return codes, centroids, mins, maxs
+
+
+def _sq_code(mins: np.ndarray, maxs: np.ndarray) -> ANN.IVFCode:
+    """The IVF-SQ8 code: rows store SQ8 codes against GLOBAL extents, so
+    a vector's replicas carry identical codes and tie exactly. Each Arrow
+    batch dequantizes once (codes * scale + min) and keeps its row norms;
+    a list scores ||q||^2 - 2 q.deq + ||deq||^2 per probing query."""
+    scales = _scales(mins, maxs)
+
+    def bind(qmat, probe):
+        qsq = (qmat ** 2).sum(-1)
+
+        def decode(col):
+            deq = np.asarray(list(col), dtype=np.float64) * scales + mins
+            return deq, (deq ** 2).sum(-1)
+
+        def kernel(blk, qis, pairs):
+            deq, rsq = blk
+            out = np.empty((len(qis), len(deq)))
+            for r, qi in enumerate(qis):
+                # identical per-row arithmetic to the joined shape
+                # (einsum row-dot against a stride-0 query view):
+                # bit-equal distances
+                q = np.broadcast_to(qmat[qi], deq.shape)
+                d2 = qsq[qi] - 2.0 * np.einsum("ij,ij->i", q, deq) + rsq
+                out[r] = np.sqrt(np.maximum(d2, 0.0))
+            return out
+        return decode, kernel
+
+    def encode(assigned, id_col, vec_col):
+        return sq_encode(assigned, mins, maxs, id_col=id_col,
+                         vec_col=vec_col, keep_cols=("list_id",))
+    return ANN.IVFCode("codes", "ivfsq", encode, bind)
 
 
 def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
@@ -270,130 +248,21 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
                  qvec_col: str = "query_vec",
                  corpus_n: int | None = None) -> DataFrame:
     """Probe the ``nprobe`` nearest centroid lists, score DEQUANTIZED codes
-    within them (Arrow GEMM local top-n per batch), merge, exact-refine.
-
-    Scale shape mirrors ivf_search: probe selection is a driver-side
-    (Q, C) argmin; the probed-list set becomes an isin scan filter and the
-    list -> probing-queries map rides the UDF closure, so probed codes
-    stream through Arrow once (never replicated per probing query);
-    scoring + per-(list, query) local top-n happen in one Arrow stage; one
-    qid-hash exchange serves both the cross-partition replication dedupe
-    (ivf assign_n=2 surfaces a vector twice) and the ranking window; the
-    refine join broadcasts the bounded candidate set.
-    ``refine_factor='auto'`` holds rf*k at IVFSQ_REFINE_FRACTION of the
-    corpus; a fixed rf below the fraction warns (the shared decay policy).
-    """
-    import pandas as pd
-
-    from vectordb_explorations_spark.operators.pq import (
-        _exact_refine, _resolve_refine_factor)
-
-    if refine_with is not None:
-        from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
-        refine_factor = _resolve_refine_factor(
-            refine_factor, codes_df, k, IVFSQ_REFINE_FRACTION, "ivfsq",
-            corpus_n=corpus_n, replication=IVF_ASSIGN_N)
-
-    scales = _scales(mins, maxs)
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [int(r[0]) for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    qsq = (qmat ** 2).sum(-1)
-
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)
-    nn = min(nprobe, centroids.shape[0])
-    by_list: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        order = np.lexsort((np.arange(centroids.shape[0]), cdist[qi]))[:nn]
-        for li in order:
-            by_list.setdefault(int(li), []).append(qi)
-    # Probe map in the UDF closure (Q x nprobe entries) — probed code rows
-    # stream through Arrow ONCE instead of once per probing query (the
-    # probe-frame broadcast join measured 12.6x row replication at 1M:
-    # the 64-byte code arrays alone were ~1.6 GB of duplicated Arrow
-    # traffic; 10.1 s -> this shape).
-    list_q = {li: np.asarray(v, dtype=np.int64) for li, v in by_list.items()}
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    scan = (codes_df.where(F.col("list_id").isin(sorted(by_list)))
-            .select("list_id", id_col, "codes"))
-
-    n_local = k * refine_factor if refine_with is not None else k
-    schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("sq_dist", T.DoubleType()),
-    ])
-
-    def score(batches):
-        # Accumulate per partition, emit once — per-(list, query) local
-        # top-n pools bound the merge shuffle input.
-        accs = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.float64)
-            deq = codes * scales + mins
-            rowsq = (deq ** 2).sum(-1)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li in np.unique(lists):
-                sel = lists == li
-                dsub, rsq, sids = deq[sel], rowsq[sel], ids[sel]
-                for qi in list_q[int(li)]:
-                    # identical per-row arithmetic to the joined shape
-                    # (einsum row-dot against a stride-0 query view):
-                    # bit-equal distances
-                    q = np.broadcast_to(qmat[qi], dsub.shape)
-                    d2 = qsq[qi] - 2.0 * np.einsum("ij,ij->i", q, dsub) \
-                        + rsq
-                    dist = np.sqrt(np.maximum(d2, 0.0))
-                    top = np.lexsort((sids, dist))[:n_local]
-                    accs.append((qid_arr[qi], sids[top], dist[top]))
-        if not accs:
-            return
-        flat = pd.DataFrame({
-            qid_col: np.concatenate(
-                [np.full(len(i), q, dtype=np.int64) for q, i, _ in accs]),
-            id_col: np.concatenate([i for _, i, _ in accs]),
-            "sq_dist": np.concatenate([d for _, _, d in accs]),
-        })
-        # replication dedupe before the local head bounds the merge
-        # without duplicates eating top-n slots (ivf_search's measured
-        # 0.96 -> 0.66 recall failure mode); SQ codes are vector-level
-        # (global mins/scales), so assign_n replicas tie exactly
-        yield (flat.sort_values([qid_col, "sq_dist", id_col])
-               .drop_duplicates([qid_col, id_col])
-               .groupby(qid_col, sort=False).head(n_local))
-
-    local = scan.mapInPandas(score, schema=schema)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("sq_dist").asc(), F.col(id_col).asc())
-    merged = (local.repartition(F.col(qid_col))
-              .dropDuplicates([qid_col, id_col])
-              .withColumn("rank", F.row_number().over(w)))
-    if refine_with is None:
-        return (merged.where(F.col("rank") <= k)
-                .select(qid_col, id_col,
-                        F.round("sq_dist", 6).alias("dist"), "rank"))
-    cand = (merged.where(F.col("rank") <= n_local)
-            .select(qid_col, id_col))
-    return _exact_refine(cand, qids, qmat, refine_with, k, qmat.shape[1],
-                         id_col, vec_col, qid_col, qvec_col)
+    within them, merge, optionally exact-refine — the SQ8 binding of the
+    shared IVF path (``ann._ivf_search``)."""
+    return ANN._ivf_search(
+        codes_df, *ANN._ivf_batch(queries, centroids, nprobe, qid_col,
+                                  qvec_col),
+        k, _sq_code(mins, maxs), refine_with, refine_factor, corpus_n,
+        id_col, vec_col, qid_col, qvec_col)
 
 
 def ivfsq_persist_partitioned(codes_df: DataFrame, path: str,
                               id_col: str = "vec_id") -> None:
-    """Persist IVF-SQ8 codes hive-partitioned by list_id — the 1-byte
-    twin of ivfpq_persist_partitioned: probe pruning happens at the file
-    listing, and what survives is nprobe/C of a table already 32x
-    narrower than the vectors. Sidecar corpus metadata makes serving's
-    refine-policy resolution job-free."""
-    from vectordb_explorations_spark.operators.pq import _write_corpus_meta
-    (codes_df.select(id_col, "codes", "list_id")
-     .write.mode("overwrite").partitionBy("list_id").parquet(path))
-    _write_corpus_meta(
-        path, codes_df.select(id_col).distinct().count())
+    """Persist IVF-SQ8 codes as the shared IVF layout — the 1-byte twin
+    of ivfpq_persist_partitioned: what a probe reads is nprobe/C of a
+    table already 4x narrower than the float32 vectors."""
+    ANN._ivf_persist(codes_df, path, "codes", id_col)
 
 
 def ivfsq_append_partitioned(path: str, centroids: np.ndarray,
@@ -401,28 +270,13 @@ def ivfsq_append_partitioned(path: str, centroids: np.ndarray,
                              new_vectors: DataFrame,
                              id_col: str = "vec_id",
                              vec_col: str = "embedding") -> None:
-    """Incremental IVF-SQ8 maintenance: assign + quantize ONLY the new
-    batch against the FROZEN centroids and global extents, append into
-    the hive layout (partition-local writes), and advance the sidecar
-    corpus count so ``refine_factor='auto'`` stays job-free and true to
-    N. O(batch) in ONE source pass (the sidecar increment is an observed
-    metric on the write job); codes are bit-identical to a rebuild's
-    (sq_encode is extent-deterministic and shared). Extent drift (a new
+    """Append a new batch to the IVF-SQ8 layout against the FROZEN
+    centroids and global extents (``ann._ivf_append``). Extent drift (a
     batch outside the trained min/max clips to the range edge) is the
     documented SQ8 trade — re-train + rewrite when the quantization
-    audit says so; id/atomicity contract in
-    ``pq._append_codes_partitioned``."""
-    from vectordb_explorations_spark.operators.ann import (IVF_ASSIGN_N,
-                                                           ivf_assign)
-    from vectordb_explorations_spark.operators.pq import (
-        _append_codes_partitioned)
-
-    an = max(1, min(IVF_ASSIGN_N, centroids.shape[0]))
-    assigned = ivf_assign(new_vectors.select(id_col, vec_col), centroids,
-                          assign_n=an, vec_col=vec_col)
-    codes = sq_encode(assigned, mins, maxs, id_col=id_col, vec_col=vec_col,
-                      keep_cols=("list_id",))
-    _append_codes_partitioned(path, codes, an, id_col)
+    audit says so."""
+    ANN._ivf_append(path, centroids, new_vectors, _sq_code(mins, maxs),
+                    id_col=id_col, vec_col=vec_col)
 
 
 def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
@@ -434,19 +288,8 @@ def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             vec_col: str = "embedding",
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
-    """Serve IVF-SQ8 from the hive layout: literal probed-list isin
-    (PartitionFilters pruning) + the standard ivfsq_search over the
-    pruned frame, refine policy resolved from sidecar metadata."""
-    from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
-    from vectordb_explorations_spark.operators.pq import (
-        _probed_union, _layout_corpus_n)
-    probed = _probed_union(centroids, queries, nprobe, qid_col, qvec_col)
-    codes = (spark.read.parquet(path)
-             .where(F.col("list_id").isin(probed)))
-    return ivfsq_search(codes, centroids, mins, maxs, queries, k,
-                        nprobe=nprobe, refine_with=refine_with,
-                        refine_factor=refine_factor,
-                        id_col=id_col, vec_col=vec_col,
-                        qid_col=qid_col, qvec_col=qvec_col,
-                        corpus_n=_layout_corpus_n(
-                            spark, path, IVF_ASSIGN_N))
+    """Serve IVF-SQ8 from the hive layout: the shared pruned probe
+    (``ann._ivf_probe``) over dequantized-code distances."""
+    return ANN._ivf_probe(spark, path, centroids, queries, k, nprobe,
+                          _sq_code(mins, maxs), refine_with, refine_factor,
+                          id_col, vec_col, qid_col, qvec_col)

@@ -17,19 +17,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-# FileOutputCommitter v1, opted into PER WRITE by the non-idempotent
-# write shapes (r14 ADVICE, session.py committer note): the session
-# default is v2 — task-parallel renames, 25-30% of many-directory
-# substrate build wall time — whose trade-off is that a task attempt
-# failing mid-commit can leave partial task output visible inside a job
-# that then retries and succeeds. A bulk OVERWRITE build replays
-# convergently (the whole directory is replaced), so builds keep v2;
-# an APPEND or dynamic partition overwrite would let a duplicated /
-# partial task output silently survive NEXT TO existing data, so those
-# writers pass these options (DataFrameWriter options reach the Hadoop
-# job conf via SessionState.newHadoopConfWithOptions). Speculative
-# execution — the other way a task commit races — is off
-# (session.py pins spark.speculation=false explicitly).
+# FileOutputCommitter v1, pinned PER WRITE by the non-idempotent write
+# shapes (r14 ADVICE, session.py committer note). The session default is
+# v1 too, but SPARK_GRAFT_COMMITTER_V=2 opts builds into v2's task-
+# parallel renames, where a task failing mid-commit can leave partial
+# output visible in a job that retries and succeeds. A bulk OVERWRITE
+# replays convergently (the whole directory is replaced); an APPEND or
+# dynamic partition overwrite (IVF appends, substrate deletes) would let
+# duplicated / partial task output survive NEXT TO existing data, so
+# those writers pass these options whatever the session says (writer
+# options reach the Hadoop job conf via
+# SessionState.newHadoopConfWithOptions). Speculative execution — the
+# other way a task commit races — is off (session.py pins
+# spark.speculation=false explicitly).
 V1_COMMITTER = {"mapreduce.fileoutputcommitter.algorithm.version": "1"}
 
 
@@ -439,9 +439,21 @@ def delete_rows_partitioned(spark: SparkSession, path: str,
         pred = pred & pk.isin(
             sorted("/".join(str(v) for v in t) for t in tkeys))
     touched_rows = tbl.where(pred)
-    n_removed = touched_rows.where(F.expr(id_col).isin(ids)).count()
-    survivors = (touched_rows.where(~F.expr(id_col).isin(ids))
-                 .localCheckpoint())
+    victim = F.expr(id_col).isin(ids)
+    n_removed = touched_rows.where(victim).count()
+    _rewrite_survivors(spark, path, touched_rows, partition_by, tkeys, victim)
+    return n_removed
+
+
+def _rewrite_survivors(spark: SparkSession, path: str,
+                       touched_rows: DataFrame, partition_by: list[str],
+                       touched: set, victim) -> None:
+    """The rewrite half of a bounded-touch delete, given the touched
+    partitions' rows and their keys (tuples aligned with
+    ``partition_by``): localCheckpoint the SURVIVORS (rows not matching
+    ``victim``), dynamic-overwrite just those partitions, and remove
+    every touched partition directory left empty."""
+    survivors = touched_rows.where(~victim).localCheckpoint()
     kept = {tuple(r[c] for c in partition_by) for r in
             survivors.select(*partition_by).distinct().collect()}
     if kept:
@@ -449,18 +461,17 @@ def delete_rows_partitioned(spark: SparkSession, path: str,
         # is right at BUILD time over thousands of tiny directories
         # (minhash_persist), but an erasure rewrite of one large
         # partition (the maxsim weights face is a single ingest_key
-        # directory holding a whole ingest batch) would funnel it
-        # through ONE task. Survivors inherit the pruned read's
-        # parallelism, so files per rewritten directory stay bounded by
-        # the directory's own input file count.
+        # directory holding a whole ingest batch; an IVF list can be GBs)
+        # would funnel it through ONE task. Survivors inherit the pruned
+        # read's parallelism, so files per rewritten directory stay
+        # bounded by the directory's own input file count.
         overwrite_partitions(survivors, path, partition_by)
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.FileSystem.get(
         spark._jsc.hadoopConfiguration())
-    for t in sorted(tkeys - kept):
+    for t in sorted(touched - kept):
         sub = "/".join(f"{c}={v}" for c, v in zip(partition_by, t))
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}"), True)
-    return n_removed
 
 
 def merge_upsert(spark: SparkSession, updates: DataFrame, path: str,
