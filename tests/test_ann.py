@@ -155,6 +155,150 @@ def test_hnsw_reference_walk_compat():
     assert shorter + worse > 0
 
 
+# Reference for the lockstep kernel: the per-query greedy descent and
+# SEARCH-LAYER it replaced, kept verbatim apart from the visited set
+# (a local boolean array instead of the graph's timestamp array).
+def _ref_search_layer(g, q, entry, layer, ef):
+    import heapq
+
+    import numpy as np
+    vt = np.zeros(g.n, dtype=bool)
+    vt[entry] = True
+    d0 = g._dist_one(q, entry)
+    cand = [(d0, entry)]
+    best = [(-d0, entry)]
+    while cand:
+        d, node = heapq.heappop(cand)
+        if d > -best[0][0] and len(best) >= ef:
+            break
+        cnt = g.nbr_cnt[node][layer]
+        if not cnt:
+            continue
+        neigh = g.nbr_idx[node][layer][:cnt]
+        fresh = neigh[~vt[neigh]]
+        if fresh.size == 0:
+            continue
+        vt[fresh] = True
+        dists = g._dist_many(q, fresh)
+        nb = len(best)
+        bound = -best[0][0]
+        for nd, nn in zip(dists.tolist(), fresh.tolist()):
+            if nb < ef or nd < bound:
+                heapq.heappush(cand, (nd, nn))
+                heapq.heappush(best, (-nd, nn))
+                if nb >= ef:
+                    heapq.heappop(best)
+                else:
+                    nb += 1
+                bound = -best[0][0]
+    return sorted((-d, n) for d, n in best)
+
+
+def _ref_greedy_descend(g, q, from_level, to_level):
+    import numpy as np
+    node = g.entry
+    for layer in range(from_level, to_level, -1):
+        improved = True
+        cur = g._dist_one(q, node)
+        while improved:
+            improved = False
+            cnt = g.nbr_cnt[node][layer]
+            if cnt:
+                neigh = g.nbr_idx[node][layer][:cnt]
+                dists = g._dist_many(q, neigh)
+                j = int(np.argmin(dists))
+                if dists[j] < cur:
+                    cur = float(dists[j])
+                    node = int(neigh[j])
+                    improved = True
+    return node
+
+
+def _ref_search(g, q, k, ef_search):
+    import math
+
+    import numpy as np
+    if g.entry is None:
+        return []
+    q = q.astype(np.float64)
+    ep = _ref_greedy_descend(g, q, g.max_level, 0)
+    found = _ref_search_layer(g, q, ep, 0, max(ef_search, k))
+    out = [(g.ids[n], math.sqrt(d)) for d, n in found]
+    out.sort(key=lambda t: (t[1], t[0]))
+    return out[:k]
+
+
+class _RefGraph(HnswGraph):
+    """An HnswGraph whose inserts run the per-query reference search."""
+
+    def _descend(self, qs, to_level):
+        if self.max_level <= to_level:
+            return [self.entry] * len(qs)
+        return [_ref_greedy_descend(self, q, self.max_level, to_level)
+                for q in qs]
+
+    def _search_layer(self, qs, eps, layer, ef):
+        return [_ref_search_layer(self, q, ep, layer, ef)
+                for q, ep in zip(qs, eps)]
+
+
+def test_hnsw_lockstep_kernel_matches_per_query_reference():
+    """The lockstep kernel is bit-equal to the per-query search it
+    replaced: on a bulk-built graph, on a graph built by sequential
+    inserts (whose adjacency must also match an insert-by-insert
+    reference build), with ef_search < k, on an empty graph, and on a
+    batch spanning several lockstep groups. Every row is stored twice
+    and some queries hit graph points exactly, so distance ties reach
+    the descent's first-minimum rule and the heaps' tie-breaks."""
+    import numpy as np
+
+    from vectordb_explorations_spark.operators.hnsw import _LOCKSTEP_GROUP
+
+    rng = np.random.RandomState(11)
+    centers = rng.standard_normal((6, 8)) * 4.0
+    mat = np.repeat(centers[rng.randint(0, 6, 350)]
+                    + rng.standard_normal((350, 8)), 2, axis=0)
+
+    def queries(n):
+        qs = mat[rng.randint(0, len(mat), n)] + rng.standard_normal((n, 8))
+        qs[: n // 4] = mat[: n // 4]  # exact hits
+        return qs
+
+    def check(g, qs, k, ef):
+        assert g._descend(qs, 0) == [
+            _ref_greedy_descend(g, q, g.max_level, 0) for q in qs]
+        got = g.search_batch(qs, k, ef)
+        assert got == [_ref_search(g, q, k, ef) for q in qs]
+        assert g.search(qs[0], k, ef) == got[0]
+
+    bulk = HnswGraph(dim=8, m=6, ef_construction=32, seed=1)
+    bulk.bulk_add(np.arange(700), mat)
+    check(bulk, queries(60), 10, 32)
+    check(bulk, queries(20), 10, 4)  # ef_search < k
+    check(bulk, queries(40), 1, 1)  # a full beam meets its exact ties
+    check(bulk, queries(2 * _LOCKSTEP_GROUP + 3), 5, 16)
+
+    seq = HnswGraph(dim=8, m=6, ef_construction=24, seed=2)
+    ref = _RefGraph(dim=8, m=6, ef_construction=24, seed=2)
+    seq.bulk_add(np.arange(300), mat[:300])
+    ref.bulk_add(np.arange(300), mat[:300])
+    assert (seq.entry, seq.levels) == (ref.entry, ref.levels)
+    for i in range(seq.n):
+        for lay, cnt in enumerate(seq.nbr_cnt[i]):
+            assert cnt == ref.nbr_cnt[i][lay]
+            assert seq.nbr_idx[i][lay][:cnt].tolist() == \
+                ref.nbr_idx[i][lay][:cnt].tolist()
+            assert seq.nbr_d[i][lay][:cnt].tolist() == \
+                ref.nbr_d[i][lay][:cnt].tolist()
+    check(seq, queries(40), 10, 32)
+    check(seq, queries(10), 10, 3)
+
+    empty = HnswGraph(dim=8)
+    qs = queries(3)
+    assert empty.search_batch(qs, 5) == [[], [], []]
+    assert empty.search(qs[0], 5) == [] == _ref_search(empty, qs[0], 5, 64)
+
+
 def test_lsh_refined_hot_buckets(spark, sf_dir, exact):
     """A tiny bucket_cap forces every bucket through the in-bucket k-means
     refinement; recall must hold and sub-bucket sizes must be bounded."""
@@ -367,6 +511,82 @@ def test_ivf_probe_partitioned_runs_one_job(spark, sf_dir, tmp_path):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs[family] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs == {"ivf": 1, "ivfpq": 1, "ivfsq": 1}, jobs
+
+
+def test_hnsw_probe_partitioned_runs_one_job(spark, sf_dir, tmp_path):
+    """An unforced probe of a persisted HNSW layout with its sidecar runs
+    exactly ONE Spark job: the query collect. The live shards' centroids
+    come from the sidecar, routing is driver-side, the routed shards'
+    read takes the sidecar's read-back schema (no footer-inference job),
+    and the collected batch is handed to the serve step (no second
+    query or centroid collect)."""
+    import uuid
+
+    from vectordb_explorations_spark.operators.hnsw import (
+        hnsw_persist_partitioned, hnsw_probe_partitioned)
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    path = str(tmp_path / "hnsw_one_job")
+    hnsw_persist_partitioned(
+        hnsw_build(emb, num_shards=4, shard_by="kmeans"), path)
+    qs = sample_queries(emb, 5)
+    sc = spark.sparkContext
+    group = f"hnsw-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "hnsw")
+    try:
+        hnsw_probe_partitioned(spark, path, qs, K, probe_shards=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_hnsw_probe_routes_only_live_shards(spark, sf_dir, tmp_path):
+    """A delete that empties a shard removes its directory and leaves the
+    sidecar's centroids alone; the probe routes only over shards whose
+    directory exists, so it serves exactly what ``hnsw_search`` over a
+    full read of the layout serves. With the sidecar deleted, the
+    full-read fallback serves the same rows."""
+    import json
+    import os
+    import pickle
+
+    from vectordb_explorations_spark.operators.ann import IVF_META
+    from vectordb_explorations_spark.operators.hnsw import (
+        hnsw_delete_partitioned, hnsw_persist_partitioned,
+        hnsw_probe_partitioned)
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    path = str(tmp_path / "hnsw_live")
+    hnsw_persist_partitioned(
+        hnsw_build(emb, num_shards=4, shard_by="kmeans"), path)
+    members = {int(r["shard"]): sorted(pickle.loads(r["blob"]).ids) for r in
+               spark.read.parquet(path).select("shard", "blob").collect()}
+    emptied = min(members, key=lambda s: len(members[s]))
+    hnsw_delete_partitioned(spark, path, members[emptied])
+    assert not os.path.isdir(os.path.join(path, f"shard={emptied}"))
+    meta = os.path.join(path, IVF_META)
+    with open(meta) as f:
+        assert str(emptied) in json.load(f)["shards"]
+
+    qs = sample_queries(emb, 8).cache()
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    served = {}
+    for probe in (2, "auto"):
+        served[probe] = rows(hnsw_probe_partitioned(
+            spark, path, qs, K, probe_shards=probe))
+        assert served[probe] == rows(hnsw_search(
+            spark.read.parquet(path), qs, K, probe_shards=probe))
+        assert served[probe]
+    os.remove(meta)
+    crc = os.path.join(path, f".{IVF_META}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert rows(hnsw_probe_partitioned(spark, path, qs, K,
+                                       probe_shards=2)) == served[2]
 
 
 def test_hnsw_append_rebuilds_only_touched_shards(spark, sf_dir, tmp_path):

@@ -35,6 +35,7 @@ against operators/knn.py (tests/test_ann.py), never a value hash (§0, §5).
 from __future__ import annotations
 
 import heapq
+import json
 import math
 import pickle
 from typing import Iterator
@@ -45,6 +46,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from vectordb_explorations_spark.operators.ann import collect_query_batch
+
+
+# Queries per lockstep search group: one round gathers at most this many
+# queries' fresh neighbours (<= 2M + 1 rows each), so its (rows x dim)
+# gather stays a few MB for any batch up to ann.QUERY_BATCH_CAP.
+_LOCKSTEP_GROUP = 256
 
 
 class HnswGraph:
@@ -80,16 +87,11 @@ class HnswGraph:
         self.nbr_idx: list[list[np.ndarray]] = []
         self.nbr_d: list[list[np.ndarray]] = []
         self.nbr_cnt: list[list[int]] = []
-        # Timestamp visited-set: one persistent int64 array, bump the tag
-        # per search instead of allocating a set (allocation-free).
-        self._visit = np.zeros(self._cap, dtype=np.int64)
-        self._visit_tag = 0
         self.entry: int | None = None
         self.max_level = -1
 
     # Pickle only the live rows — a doubled buffer would otherwise bloat
-    # persisted index blobs by up to 2x; the visited scratch array is
-    # rebuilt on load. Adjacency is PACKED into three flat arrays: the
+    # persisted index blobs by up to 2x. Adjacency is PACKED into three flat arrays: the
     # live (node, layer) ndarray-per-entry representation costs ~200 B of
     # pickle framing PER ARRAY plus slack capacity plus float64 cached
     # distances, which the round-8 1M probe measured as the dominant term
@@ -114,8 +116,6 @@ class HnswGraph:
         state["vectors"] = (narrow if np.array_equal(
             narrow.astype(np.float64), live) else live.copy())
         state["_cap"] = self.n
-        del state["_visit"]
-        del state["_visit_tag"]
         cnt_flat = (np.concatenate(
             [np.asarray(c, dtype=np.int32) for c in self.nbr_cnt])
             if self.n else np.empty(0, dtype=np.int32))
@@ -161,8 +161,6 @@ class HnswGraph:
                 self.nbr_idx.append(li)
                 self.nbr_d.append(ld)
                 self.nbr_cnt.append(lc)
-        self._visit = np.zeros(max(self._cap, 1), dtype=np.int64)
-        self._visit_tag = 0
 
     def _reserve(self, extra: int) -> None:
         need = self.n + extra
@@ -172,9 +170,6 @@ class HnswGraph:
             buf = np.empty((self._cap, self.dim), dtype=np.float64)
             buf[: self.n] = self.vectors[: self.n]
             self.vectors = buf
-            vis = np.zeros(self._cap, dtype=np.int64)
-            vis[: len(self._visit)] = self._visit
-            self._visit = vis
 
     def _layer_cap(self, layer: int) -> int:
         # canonical degree caps: 2M at layer 0, M above; +1 slack slot so
@@ -192,67 +187,129 @@ class HnswGraph:
         d = self.vectors[idx] - q
         return float(d @ d)
 
+    def _score(self, qs: np.ndarray, owners: list[int],
+               idx: list[int]) -> list[float]:
+        """The one distance gather of a lockstep round: row i is node
+        ``idx[i]`` against query ``qs[owners[i]]``, a row einsum of
+        (v - q) — per pair the same arithmetic as ``_dist_many``."""
+        d = self.vectors[idx] - qs[owners]
+        return np.einsum("ij,ij->i", d, d).tolist()
+
     def _random_level(self) -> int:
         # ⌊-ln(U) · mult⌋ — the reference's draw shape (hnsw.cc:142) with a
         # configurable multiplier; cap keeps layer count logarithmic.
         u = max(self.rng.random_sample(), 1e-12)
         return min(int(-math.log(u) * self.level_mult), 31)
 
-    def _search_layer(self, q: np.ndarray, entry: int, layer: int, ef: int) -> list[tuple[float, int]]:
-        """ef-bounded best-first search; returns up to ef (dist, node) pairs
-        sorted ascending (squared distances)."""
-        self._visit_tag += 1
-        tag = self._visit_tag
-        vt = self._visit
-        vt[entry] = tag
-        d0 = self._dist_one(q, entry)
-        cand = [(d0, entry)]              # min-heap by distance
-        best = [(-d0, entry)]             # max-heap of current ef best
-        nbr_idx, nbr_cnt = self.nbr_idx, self.nbr_cnt
-        while cand:
-            d, node = heapq.heappop(cand)
-            if d > -best[0][0] and len(best) >= ef:
-                break
-            cnt = nbr_cnt[node][layer]
-            if not cnt:
-                continue
-            neigh = nbr_idx[node][layer][:cnt]
-            fresh = neigh[vt[neigh] != tag]
-            if fresh.size == 0:
-                continue
-            vt[fresh] = tag
-            dists = self._dist_many(q, fresh)
-            nb = len(best)
-            bound = -best[0][0]
-            for nd, nn in zip(dists.tolist(), fresh.tolist()):
-                if nb < ef or nd < bound:
-                    heapq.heappush(cand, (nd, nn))
-                    heapq.heappush(best, (-nd, nn))
-                    if nb >= ef:
-                        heapq.heappop(best)
-                    else:
-                        nb += 1
-                    bound = -best[0][0]
-        return sorted((-d, n) for d, n in best)
+    # The search kernel advances a batch of queries in LOCKSTEP: in each
+    # round every unfinished query does its own pure-Python step (heap
+    # pops, visited-set filter, in the exact order of a single-query
+    # search) and ONE gather + row einsum scores every query's new
+    # neighbours at once, so the NumPy call overhead is paid per round,
+    # not per query. Per-query state (heaps, visited set, tie-breaks,
+    # arithmetic) is untouched, so results are bit-equal to searching
+    # each query alone. Neighbour slices are read as nodes expand — no
+    # per-call adjacency copy, so a single-query ``add`` stays O(visited).
 
-    def _greedy_descend(self, q: np.ndarray, from_level: int, to_level: int) -> int:
-        """Beam-1 descent through upper layers — hnsw.cc:150-156/279-282."""
-        node = self.entry
-        for layer in range(from_level, to_level, -1):
-            improved = True
-            cur = self._dist_one(q, node)
-            while improved:
-                improved = False
-                cnt = self.nbr_cnt[node][layer]
-                if cnt:
-                    neigh = self.nbr_idx[node][layer][:cnt]
-                    dists = self._dist_many(q, neigh)
-                    j = int(np.argmin(dists))
-                    if dists[j] < cur:
-                        cur = float(dists[j])
-                        node = int(neigh[j])
-                        improved = True
-        return node
+    def _descend(self, qs: np.ndarray, to_level: int) -> list[int]:
+        """Beam-1 greedy descent (hnsw.cc:150-156/279-282) of every row of
+        ``qs`` from the entry point through layers max_level..to_level+1;
+        returns each query's entry node for layer ``to_level``. Each
+        layer starts from ``_dist_one`` of the current node and moves to
+        the first nearest neighbour while it strictly improves."""
+        nodes = [self.entry] * len(qs)
+        if self.max_level <= to_level:
+            return nodes
+        layers = [self.max_level] * len(qs)
+        curs = [self._dist_one(q, self.entry) for q in qs]
+        nbr_idx, nbr_cnt = self.nbr_idx, self.nbr_cnt
+        active = range(len(qs))
+        while active:
+            owners, idx, spans = [], [], []
+            for qi in active:
+                node, layer = nodes[qi], layers[qi]
+                while not nbr_cnt[node][layer]:
+                    layer -= 1
+                    if layer == to_level:
+                        break
+                    curs[qi] = self._dist_one(qs[qi], node)
+                layers[qi] = layer
+                if layer > to_level:
+                    neigh = nbr_idx[node][layer][
+                        :nbr_cnt[node][layer]].tolist()
+                    spans.append((qi, len(idx), neigh))
+                    idx += neigh
+                    owners += [qi] * len(neigh)
+            if not spans:
+                break
+            dists = self._score(qs, owners, idx)
+            active = []
+            for qi, s, neigh in spans:
+                seg = dists[s:s + len(neigh)]
+                d = min(seg)  # first minimum, as np.argmin
+                if d < curs[qi]:
+                    curs[qi] = d
+                    nodes[qi] = neigh[seg.index(d)]
+                    active.append(qi)
+                elif layers[qi] - 1 > to_level:
+                    layers[qi] -= 1
+                    curs[qi] = self._dist_one(qs[qi], nodes[qi])
+                    active.append(qi)
+        return nodes
+
+    def _search_layer(self, qs: np.ndarray, eps: list[int], layer: int,
+                      ef: int) -> list[list[tuple[float, int]]]:
+        """ef-bounded best-first SEARCH-LAYER of every row of ``qs`` from
+        its entry ``eps[i]`` on ``layer``; returns each query's up to ef
+        (squared dist, node) pairs sorted ascending. A round pops each
+        query's candidates until one has unvisited neighbours (or the
+        query stops), then scores all of them in one gather."""
+        nbr_idx, nbr_cnt = self.nbr_idx, self.nbr_cnt
+        cands, bests, seens = [], [], []
+        for q, ep in zip(qs, eps):
+            d0 = self._dist_one(q, ep)
+            cands.append([(d0, ep)])      # min-heap by distance
+            bests.append([(-d0, ep)])     # max-heap of current ef best
+            seens.append({ep})
+        active = range(len(eps))
+        while active:
+            owners, idx, spans = [], [], []
+            for qi in active:
+                cand, best, seen = cands[qi], bests[qi], seens[qi]
+                while cand:
+                    d, node = heapq.heappop(cand)
+                    if d > -best[0][0] and len(best) >= ef:
+                        break
+                    cnt = nbr_cnt[node][layer]
+                    if not cnt:
+                        continue
+                    fresh = [x for x in nbr_idx[node][layer][:cnt].tolist()
+                             if x not in seen]
+                    if fresh:
+                        seen.update(fresh)
+                        spans.append((qi, len(idx), fresh))
+                        idx += fresh
+                        owners += [qi] * len(fresh)
+                        break
+            if not spans:
+                break
+            dists = self._score(qs, owners, idx)
+            active = []
+            for qi, s, fresh in spans:
+                cand, best = cands[qi], bests[qi]
+                nb = len(best)
+                bound = -best[0][0]
+                for nd, nn in zip(dists[s:s + len(fresh)], fresh):
+                    if nb < ef or nd < bound:
+                        heapq.heappush(cand, (nd, nn))
+                        heapq.heappush(best, (-nd, nn))
+                        if nb >= ef:
+                            heapq.heappop(best)
+                        else:
+                            nb += 1
+                        bound = -best[0][0]
+                active.append(qi)
+        return [sorted((-d, n) for d, n in best) for best in bests]
 
     def add(self, vec_id: int, vec: np.ndarray) -> None:
         level = self._random_level()
@@ -271,12 +328,11 @@ class HnswGraph:
             self.entry = idx
             self.max_level = level
             return
-        q = self.vectors[idx]
-        ep = self.entry
-        if self.max_level > level:
-            ep = self._greedy_descend(q, self.max_level, level)
+        q = self.vectors[idx:idx + 1]
+        ep = self._descend(q, level)[0]
         for layer in range(min(level, self.max_level), -1, -1):
-            found = self._search_layer(q, ep, layer, self.ef_construction)
+            found = self._search_layer(q, [ep], layer,
+                                       self.ef_construction)[0]
             ep = found[0][1]
             links = found[: self.m]
             ai, ad = self.nbr_idx[idx][layer], self.nbr_d[idx][layer]
@@ -429,6 +485,29 @@ class HnswGraph:
             cur = nxt
         return chain
 
+    def _top_k(self, found: list[tuple[float, int]],
+               k: int) -> list[tuple[int, float]]:
+        # internal distances are squared; surface true L2
+        out = [(self.ids[n], math.sqrt(d)) for d, n in found]
+        out.sort(key=lambda t: (t[1], t[0]))
+        return out[:k]
+
+    def search_batch(self, qs: np.ndarray, k: int,
+                     ef_search: int = 64) -> list[list[tuple[int, float]]]:
+        """``search`` for every row of ``qs``, advanced in lockstep
+        groups of ``_LOCKSTEP_GROUP`` queries (so a round's gather stays
+        bounded for any batch size); element i equals
+        ``search(qs[i], k, ef_search)``."""
+        qs = np.asarray(qs, dtype=np.float64)
+        if self.entry is None:
+            return [[] for _ in range(len(qs))]
+        out = []
+        for s in range(0, len(qs), _LOCKSTEP_GROUP):
+            grp = qs[s:s + _LOCKSTEP_GROUP]
+            out += [self._top_k(found, k) for found in self._search_layer(
+                grp, self._descend(grp, 0), 0, max(ef_search, k))]
+        return out
+
     def search(self, q: np.ndarray, k: int, ef_search: int = 64,
                reference_walk: bool = False) -> list[tuple[int, float]]:
         """Top-k (vec_id, dist), deterministic tie-break by id.
@@ -439,18 +518,49 @@ class HnswGraph:
         canonical ef-bounded SEARCH-LAYER, so it MAY return fewer than k
         results and ``ef_search`` is ignored. Default stays the ef-bounded
         search — the documented improvement (module docstring)."""
+        qs = np.asarray(q, dtype=np.float64)[None, :]
+        if not reference_walk:
+            return self.search_batch(qs, k, ef_search)[0]
         if self.entry is None:
             return []
-        q = q.astype(np.float64)
-        ep = self._greedy_descend(q, self.max_level, 0)
-        if reference_walk:
-            found = self._reference_walk_layer0(q, ep)
-        else:
-            found = self._search_layer(q, ep, 0, max(ef_search, k))
-        # internal distances are squared; surface true L2
-        out = [(self.ids[n], math.sqrt(d)) for d, n in found]
-        out.sort(key=lambda t: (t[1], t[0]))
-        return out[:k]
+        return self._top_k(
+            self._reference_walk_layer0(qs[0], self._descend(qs, 0)[0]), k)
+
+
+def _shard_table(cell_shards: list[list[int]]
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """(cells, max sub-shards) shard-id table and per-cell sub-shard
+    counts — the routing geometry ``_assign_shards`` indexes."""
+    n_sub = np.asarray([len(s) for s in cell_shards], dtype=np.int64)
+    table = np.zeros((len(cell_shards), max(n_sub, default=1)),
+                     dtype=np.int64)
+    for c, shards in enumerate(cell_shards):
+        table[c, :len(shards)] = shards
+    return table, n_sub
+
+
+def _assign_shards(pdf: pd.DataFrame, id_col: str, vec_col: str,
+                   C: np.ndarray, cnorm: np.ndarray, an: int,
+                   table: np.ndarray, n_sub: np.ndarray) -> pd.DataFrame:
+    """Each row once per nearest ``an`` cells (rows of ``C``), with a
+    leading ``shard`` column: the cell's deterministic hash sub-shard
+    ``table[cell, h % n_sub[cell]]`` — a cell that was never split
+    collapses to its one shard. Shared by the build and by append, so
+    appended rows land where a rebuild would put them."""
+    X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+    d = -2.0 * X @ C.T + cnorm
+    near = np.argpartition(d, an - 1, axis=1)[:, :an]  # cells
+    # MIX the id (murmur3 finalizer), don't use it raw: ids that encode
+    # attributes (e.g. label = id mod k) make raw-modulo sub-shards
+    # degenerate to whole clusters
+    h = pdf[id_col].to_numpy().astype(np.uint64)
+    h = (h ^ (h >> np.uint64(33))) * np.uint64(0xFF51AFD7ED558CCD)
+    h = (h ^ (h >> np.uint64(33))) * np.uint64(0xC4CEB9FE1A85EC53)
+    h = (h ^ (h >> np.uint64(33))).astype(np.int64)
+    shards = table[near, h[:, None] % n_sub[near]]
+    out = pdf[[id_col, vec_col]].loc[pdf.index.repeat(an)].copy()
+    out.insert(0, "shard", shards.reshape(-1).astype(np.int32))
+    return out
 
 
 INDEX_SCHEMA = T.StructType([
@@ -532,6 +642,8 @@ def hnsw_build(vectors: DataFrame, num_shards: int = 8, m: int = 8,
             n_sub = np.ones(num_shards, dtype=np.int64)
         sub_base = np.concatenate([[0], np.cumsum(n_sub)])[:-1]
         shard_cell = np.repeat(np.arange(num_shards), n_sub)
+        shard_table = _shard_table([list(range(b, b + n))
+                                    for b, n in zip(sub_base, n_sub)])
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
@@ -562,26 +674,9 @@ def hnsw_build(vectors: DataFrame, num_shards: int = 8, m: int = 8,
         def assign(batches):
             C = bc.value
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-                d = -2.0 * X @ C.T + cnorm
-                near = np.argpartition(d, an - 1, axis=1)[:, :an]  # cells
-                ids = pdf[id_col].to_numpy()
-                # deterministic hash sub-shard within each (possibly
-                # split) cell; n_sub==1 cells collapse to the cell itself.
-                # MIX the id (murmur3 finalizer), don't use it raw: ids
-                # that encode attributes (e.g. label = id mod k) make
-                # raw-modulo sub-shards degenerate to whole clusters
-                h = ids.astype(np.uint64)
-                h = (h ^ (h >> np.uint64(33))) * np.uint64(0xFF51AFD7ED558CCD)
-                h = (h ^ (h >> np.uint64(33))) * np.uint64(0xC4CEB9FE1A85EC53)
-                h = (h ^ (h >> np.uint64(33))).astype(np.int64)
-                shards = sub_base[near] + (h[:, None] % n_sub[near])
-                out = pdf[[id_col, vec_col]].loc[
-                    pdf.index.repeat(an)].copy()
-                out.insert(0, "shard", shards.reshape(-1).astype(np.int32))
-                yield out
+                if not pdf.empty:
+                    yield _assign_shards(pdf, id_col, vec_col, C, cnorm,
+                                         an, *shard_table)
 
         sharded = vectors.select(id_col, vec_col).mapInPandas(
             assign, schema=shard_schema)
@@ -625,95 +720,86 @@ def _warn_probe_recall_risk(nn: int, n_cells: int) -> None:
             f"vs 0.936 at the auto point, sf0.1). Pass "
             f"probe_shards='auto' (resolves to "
             f"{adaptive_probe_shards(n_cells)}) or accept degraded "
-            f"recall.", RuntimeWarning, stacklevel=3)
+            f"recall.", RuntimeWarning, stacklevel=4)
 
 
-def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
-                ef_search: int = 128,
-                qid_col: str = "query_id", qvec_col: str = "query_vec",
-                id_col: str = "vec_id",
-                probe_shards: int | str | None = None) -> DataFrame:
-    """Per-shard graph search + global top-k merge — SURVEY §3 entry point
-    C, two stages and one shuffle of only shards×k rows per query.
+def _cells(shard_cents: dict[int, list]) -> dict[tuple, list[int]]:
+    """Group shards by CELL: shard_cap sub-shards share their cell's
+    centroid, and a routed query must probe the whole cell (its members
+    hash-scatter across the sub-shards). Cells are ordered by their
+    smallest shard, shards ascending within a cell."""
+    if any(c is None for c in shard_cents.values()):
+        raise ValueError(
+            "routing requires a kmeans-sharded index "
+            "(hnsw_build(shard_by='kmeans')); hash shards are uniform "
+            "samples and cannot be routed")
+    cells: dict[tuple, list[int]] = {}
+    for s in sorted(shard_cents):
+        cells.setdefault(tuple(shard_cents[s]), []).append(s)
+    return cells
 
-    With ``probe_shards=None`` every query runs on every shard (required
-    for hash-sharded indexes, whose shards are uniform corpus samples).
-    With ``probe_shards=n`` on a kmeans-sharded index (centroid column
-    non-null), each query routes to its n nearest CELLS — the IVF
-    probe-selection pattern; a split cell's sub-shards all probe — so
-    serving work is O(n cells), not O(shards): the scale path when shard
-    count grows with the corpus. Routing is a (Q, cells) NumPy argmin
-    over driver-resident centroids (num_shards rows collected once); no
-    vectors move. ``probe_shards='auto'`` resolves the count from the
-    index's cell count at the calibrated probed-fraction operating point
-    (policy block above); a fixed int below that fraction emits a loud
-    RuntimeWarning instead of silently degrading.
 
-    ef_search defaults to 128: at the 200k probe this lifts recall@10
-    0.865 → 0.935 for <25% extra beam work (per-shard graphs are small, so
-    a wider beam is cheap relative to the fan-out overhead)."""
+def _route(qmat: np.ndarray, shard_cents: dict[int, list],
+           probe_shards: int | str) -> dict[int, list[int]]:
+    """Shard -> the query rows it serves: each query goes to its
+    ``probe_shards`` nearest cells — a (Q, cells) NumPy partition over
+    driver-resident centroids, no vectors move. ``'auto'`` resolves the
+    count from the cell count at the calibrated probed-fraction point
+    (policy block above); a fixed int below that fraction warns."""
+    cells = _cells(shard_cents)
+    if not cells:
+        return {}
+    C = np.asarray(list(cells), dtype=np.float64)
+    if probe_shards == "auto":
+        nn = min(adaptive_probe_shards(len(C)), len(C))
+    else:
+        nn = min(int(probe_shards), len(C))
+        _warn_probe_recall_risk(nn, len(C))
+    d2 = -2.0 * qmat @ C.T + (C ** 2).sum(-1)  # (Q, cells)
+    near = np.argpartition(d2, nn - 1, axis=1)[:, :nn]
+    members = list(cells.values())
+    routed: dict[int, list[int]] = {}
+    for qi, row in enumerate(near.tolist()):
+        for ci in row:
+            for s in members[ci]:
+                routed.setdefault(s, []).append(qi)
+    return routed
+
+
+def _query_batch(queries: DataFrame, qid_col: str,
+                 qvec_col: str) -> tuple[list[int], np.ndarray]:
     qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [int(r[0]) for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
+    return ([int(r[0]) for r in qrows],
+            np.asarray([r[1] for r in qrows], dtype=np.float64))
 
-    routed: dict[int, list[int]] | None = None
-    if probe_shards is not None:
-        cent_rows = index_df.select("shard", "centroid").collect()
-        if any(r["centroid"] is None for r in cent_rows):
-            raise ValueError(
-                "probe_shards requires a kmeans-sharded index "
-                "(hnsw_build(shard_by='kmeans')); hash shards are uniform "
-                "samples and cannot be routed")
-        # group shards by CELL: shard_cap sub-shards share their cell's
-        # centroid, and a routed query must probe the whole cell (its
-        # members hash-scatter across the sub-shards)
-        cell_of: dict[tuple, int] = {}
-        cell_shards: list[list[int]] = []
-        cell_cents: list[list[float]] = []
-        for r in cent_rows:
-            key = tuple(r["centroid"])
-            if key not in cell_of:
-                cell_of[key] = len(cell_shards)
-                cell_shards.append([])
-                cell_cents.append(list(key))
-            cell_shards[cell_of[key]].append(int(r["shard"]))
-        C = np.asarray(cell_cents, dtype=np.float64)
-        if probe_shards == "auto":
-            nn = min(adaptive_probe_shards(len(C)), len(C))
-        else:
-            nn = min(int(probe_shards), len(C))
-            _warn_probe_recall_risk(nn, len(C))
-        d2 = -2.0 * qmat @ C.T + (C ** 2).sum(-1)  # (Q, cells)
-        near = np.argpartition(d2, nn - 1, axis=1)[:, :nn]
-        routed = {}
-        for qi in range(len(qids)):
-            for ci in near[qi]:
-                for s in cell_shards[ci]:
-                    routed.setdefault(s, []).append(qi)
 
+def _serve(index_df: DataFrame, qids: list[int], qmat: np.ndarray,
+           routed: dict[int, list[int]] | None, k: int, ef_search: int,
+           qid_col: str, id_col: str) -> DataFrame:
+    """Per-shard graph search + global top-k merge, the tail of every
+    HNSW query path: each shard's task unpickles its graph once and runs
+    its routed queries (all of them when ``routed`` is None) through the
+    lockstep kernel; one shuffle of only shards×k rows per query."""
     out_schema = T.StructType([
         T.StructField(qid_col, T.LongType()),
         T.StructField(id_col, T.LongType()),
         T.StructField("dist", T.DoubleType()),
     ])
+    every = list(range(len(qids)))
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                if routed is not None:
-                    q_sel = routed.get(int(shard), [])
-                else:
-                    q_sel = range(len(qids))
-                if not len(q_sel):
+                q_sel = every if routed is None else routed.get(int(shard))
+                if not q_sel:
                     continue
                 g: HnswGraph = pickle.loads(blob)
-                rows_q, rows_i, rows_d = [], [], []
-                for qi in q_sel:
-                    for vid, d in g.search(qmat[qi], k, ef_search):
-                        rows_q.append(qids[qi])
-                        rows_i.append(vid)
-                        rows_d.append(d)
-                yield pd.DataFrame({qid_col: rows_q, id_col: rows_i, "dist": rows_d})
+                found = g.search_batch(qmat[q_sel], k, ef_search)
+                yield pd.DataFrame({
+                    qid_col: [qids[qi] for qi, res in zip(q_sel, found)
+                              for _ in res],
+                    id_col: [vid for res in found for vid, _ in res],
+                    "dist": [d for res in found for _, d in res]})
 
     probed_df = index_df.select("shard", "blob")
     if routed is not None:
@@ -735,6 +821,44 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select(qid_col, id_col, F.round("dist", 6).alias("dist"), "rank"))
+
+
+def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
+                ef_search: int = 128,
+                qid_col: str = "query_id", qvec_col: str = "query_vec",
+                id_col: str = "vec_id",
+                probe_shards: int | str | None = None) -> DataFrame:
+    """Per-shard graph search + global top-k merge — SURVEY §3 entry point
+    C, two stages and one shuffle of only shards×k rows per query.
+
+    With ``probe_shards=None`` every query runs on every shard (required
+    for hash-sharded indexes, whose shards are uniform corpus samples).
+    With ``probe_shards=n`` on a kmeans-sharded index (centroid column
+    non-null), each query routes to its n nearest CELLS — the IVF
+    probe-selection pattern; a split cell's sub-shards all probe — so
+    serving work is O(n cells), not O(shards): the scale path when shard
+    count grows with the corpus. Routing is a (Q, cells) NumPy partition
+    over driver-resident centroids (num_shards rows collected once); no
+    vectors move. ``probe_shards='auto'`` resolves the count from the
+    index's cell count at the calibrated probed-fraction operating point
+    (policy block above); a fixed int below that fraction emits a loud
+    RuntimeWarning instead of silently degrading.
+
+    The query batch is collected once; each shard's task searches all of
+    its queries in lockstep (``HnswGraph.search_batch``), bit-equal to
+    searching them one by one.
+
+    ef_search defaults to 128: at the 200k probe this lifts recall@10
+    0.865 → 0.935 for <25% extra beam work (per-shard graphs are small, so
+    a wider beam is cheap relative to the fan-out overhead)."""
+    qids, qmat = _query_batch(queries, qid_col, qvec_col)
+    routed = None
+    if probe_shards is not None:
+        routed = _route(qmat, {int(r["shard"]): r["centroid"] for r in
+                               index_df.select("shard", "centroid")
+                               .collect()}, probe_shards)
+    return _serve(index_df, qids, qmat, routed, k, ef_search, qid_col,
+                  id_col)
 
 
 def _members_path(path: str) -> str:
@@ -786,15 +910,74 @@ def hnsw_persist_partitioned(index_df: DataFrame, path: str) -> None:
     pruning instead of unpickling every graph blob (r13 verdict item
     6 — the locate used to be O(index blobs) per delete batch).
     Maintained by append and delete; absent for pre-r14 layouts, where
-    delete falls back to the blob pass."""
-    from vectordb_explorations_spark.sources.sinks import (
-        repartition_for_hive)
+    delete falls back to the blob pass. Its rows are read back from the
+    written layout, so an uncached ``index_df`` is built once.
 
+    Last, the IVF layouts' sidecar (``ann.IVF_META``): the read-back
+    ``schema`` and the ``shards`` map from shard to centroid (null for
+    hash shards), so probe, append and delete route and read only their
+    shard directories without listing the tree or running a job. The
+    centroids are frozen geometry: append and delete never rewrite it,
+    and a shard counts as live while its directory exists. Layouts
+    without it (persisted before it existed, or a crash before it was
+    written) fall back to a full-read routing."""
+    from vectordb_explorations_spark.operators.ann import IVF_META
+    from vectordb_explorations_spark.sources.sinks import (
+        hive_leaf_schema, repartition_for_hive, write_json_sidecar)
+
+    spark = index_df.sparkSession
     index_df.write.mode("overwrite").partitionBy("shard").parquet(path)
-    (repartition_for_hive(_blob_members(index_df), "shard")
+    schema = hive_leaf_schema(spark, path, 1)
+    written = (index_df if schema is None else
+               spark.read.schema(schema).option("basePath", path)
+               .parquet(path))
+    (repartition_for_hive(_blob_members(written), "shard")
      .sortWithinPartitions("vec_id")
      .write.mode("overwrite").partitionBy("shard")
      .parquet(_members_path(path)))
+    if schema is not None:
+        write_json_sidecar(spark, f"{path}/{IVF_META}", {
+            "schema": schema.json(),
+            "shards": {str(r["shard"]): r["centroid"] for r in
+                       written.select("shard", "centroid").collect()}})
+
+
+def _read_shards(spark, path: str, shards: list[int],
+                 schema: T.StructType) -> DataFrame:
+    """The index rows of ``shards`` only: lists and reads just their
+    directories with the sidecar's read-back ``schema`` (no footer
+    inference) and keeps the literal ``shard IN (...)`` so the plan
+    still shows PartitionFilters."""
+    from vectordb_explorations_spark.sources.sinks import read_hive_pruned
+
+    df = read_hive_pruned(spark, path, ["shard"], [(s,) for s in shards],
+                          schema=schema)
+    if df is None:  # none of the shards has a directory
+        df = spark.createDataFrame([], schema)
+    return df.where(F.col("shard").isin(shards))
+
+
+def _open_layout(spark, path: str):
+    """``(shard_cents, read)`` of a persisted layout: the live shards'
+    centroids and ``read(shards)``, a frame of those shards' index rows.
+    With the sidecar both are job-free and touch only the wanted
+    directories (a shard whose directory a delete removed is not live,
+    so nothing routes to it); without it, one full read collects the
+    centroids and is filtered per call."""
+    from vectordb_explorations_spark.operators.ann import _ivf_meta
+    from vectordb_explorations_spark.sources.sinks import (
+        hive_partition_values)
+
+    meta = _ivf_meta(spark, path)
+    if meta is None or "shards" not in meta:
+        full = spark.read.parquet(path)
+        return ({int(r["shard"]): r["centroid"] for r in
+                 full.select("shard", "centroid").collect()},
+                lambda shards: full.where(F.col("shard").isin(shards)))
+    live = hive_partition_values(spark, path, "shard")
+    schema = T.StructType.fromJson(json.loads(meta["schema"]))
+    return ({int(s): c for s, c in meta["shards"].items() if s in live},
+            lambda shards: _read_shards(spark, path, shards, schema))
 
 
 def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
@@ -803,55 +986,26 @@ def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
                            qid_col: str = "query_id",
                            qvec_col: str = "query_vec",
                            id_col: str = "vec_id") -> DataFrame:
-    """Serve from the partitioned index: read the (tiny) shard->centroid
-    metadata columns, route every query driver-side, apply the UNION of
-    routed shards as a literal isin filter — that is what partition-prunes
-    the scan — and run the standard ``hnsw_search`` over the pruned frame.
+    """Serve from the partitioned index with one Spark job before the
+    result — the query collect: take the live shards' centroids from
+    the sidecar, route every query driver-side over them, read ONLY the
+    routed shard directories (``sinks.read_hive_pruned`` with the
+    sidecar's schema: no tree listing, no footer inference; the literal
+    ``shard IN (...)`` keeps PartitionFilters in the plan) and hand the
+    collected batch and its routing to the same per-shard search and
+    merge ``hnsw_search`` ends in. Results are bit-equal to
+    ``hnsw_search`` over the full layout with the same ``probe_shards``
+    (pinned by tests/test_ann.py), and the recall-risk warning for a
+    low fixed ``probe_shards`` is judged against every live cell.
 
-    Routing stability under pruning: each query's ``probe_shards`` nearest
-    cells are in the union by construction, so re-routing inside
-    ``hnsw_search`` over the union's cells selects the same cells per
-    query — bit-equality with the in-memory search is pinned by
-    tests/test_ann.py. Requires a kmeans-sharded index (non-null
-    centroids); hash shards cannot be routed."""
-    full = spark.read.parquet(path)
-    cent_rows = full.select("shard", "centroid").collect()
-    if any(r["centroid"] is None for r in cent_rows):
-        raise ValueError(
-            "hnsw_probe_partitioned requires a kmeans-sharded index "
-            "(hnsw_build(shard_by='kmeans'))")
-    cell_shards: dict[tuple, list[int]] = {}
-    for r in cent_rows:
-        cell_shards.setdefault(tuple(r["centroid"]), []).append(int(r["shard"]))
-    C = np.asarray(list(cell_shards), dtype=np.float64)
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    if probe_shards == "auto":
-        # resolve ONCE here (the inner hnsw_search re-resolves over the
-        # pruned union's cells, which is the same cell population by
-        # construction — but pass the resolved int so the risk warning
-        # cannot double-fire)
-        probe_shards = adaptive_probe_shards(len(C))
-    else:
-        probe_shards = int(probe_shards)
-        # risk-warn HERE against the FULL cell population: the inner
-        # hnsw_search re-routes over the PRUNED union (only the probed
-        # cells survive the isin filter), so from its viewpoint a risky
-        # fixed probe looks like a full fan-out and its own check stays
-        # silent (caught by review — the comment previously claimed the
-        # populations were the same, which is only true for 'auto')
-        _warn_probe_recall_risk(min(probe_shards, len(cell_shards)),
-                                len(cell_shards))
-    nn = min(probe_shards, len(C))
-    d2 = -2.0 * qmat @ C.T + (C ** 2).sum(-1)
-    near = np.argpartition(d2, nn - 1, axis=1)[:, :nn]
-    cells = list(cell_shards.values())
-    routed = sorted({s for qi in range(len(qrows))
-                     for ci in near[qi] for s in cells[ci]})
-    pruned = full.where(F.col("shard").isin(routed))
-    return hnsw_search(pruned, queries, k, ef_search=ef_search,
-                       qid_col=qid_col, qvec_col=qvec_col, id_col=id_col,
-                       probe_shards=probe_shards)
+    Layouts without the sidecar route over a full read of the layout.
+    Requires a kmeans-sharded index (non-null centroids); hash shards
+    cannot be routed."""
+    shard_cents, read = _open_layout(spark, path)
+    qids, qmat = _query_batch(queries, qid_col, qvec_col)
+    routed = _route(qmat, shard_cents, probe_shards)
+    return _serve(read(sorted(routed)), qids, qmat, routed, k, ef_search,
+                  qid_col, id_col)
 
 
 def hnsw_delete_partitioned(spark, path: str, delete_ids,
@@ -868,7 +1022,8 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
     victim membership is TWO narrow scans of (shard, vec_id) — the
     victims' rows via a pushed isin over the sorted vec_id column
     (row-group pruned), and the touched shards' totals via partition
-    pruning — no blob is unpickled outside the rebuild itself, so a
+    pruning — no blob is unpickled outside the rebuild itself, and the
+    rebuild lists and reads only the touched shard directories, so a
     delete batch costs O(victims' shards), not O(index). Without the
     sidecar (pre-r14 layouts) the legacy path unpickles each shard's
     blob in one Arrow pass over (shard, blob). Rebuild:
@@ -879,11 +1034,13 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
     graph bit for bit); untouched shard directories keep their exact
     files (dynamic partition overwrite); a fully-emptied shard's
     directory is removed explicitly — a dynamic overwrite cannot see
-    it. ``seed`` must match the build's."""
+    it — and that removal alone retires the shard from routing (probes
+    route over sidecar shards whose directory exists), so the
+    ``ann.IVF_META`` sidecar is never rewritten. ``seed`` must match
+    the build's."""
     victims = sorted({int(i) for i in delete_ids})
     if not victims:
         return 0
-    full = spark.read.parquet(path)
     vict_arr = np.asarray(victims, dtype=np.int64)
     bc = spark.sparkContext.broadcast(vict_arr)
 
@@ -903,6 +1060,7 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
         n_removed = sum(per_shard.values())
         if not touched:
             return 0
+        index = _open_layout(spark, path)[1](touched)
     else:
         count_schema = T.StructType([
             T.StructField("shard", T.IntegerType()),
@@ -926,12 +1084,14 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
                                        columns=["shard", "n_victims",
                                                 "n_total"])
 
+        full = spark.read.parquet(path)
         located = (full.select("shard", "blob")
                    .mapInPandas(locate, schema=count_schema).collect())
         touched = sorted(r["shard"] for r in located if r["n_victims"])
         n_removed = sum(int(r["n_victims"]) for r in located)
         if not touched:
             return 0
+        index = full.where(F.col("shard").isin(touched))
 
     def rebuild(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
@@ -957,8 +1117,7 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
                     "centroid": [r["centroid"]],
                 })
 
-    rebuilt = (full.where(F.col("shard").isin(touched))
-               .select("shard", "blob", "centroid")
+    rebuilt = (index.select("shard", "blob", "centroid")
                .mapInPandas(rebuild, schema=INDEX_SCHEMA)
                .localCheckpoint(eager=True))
     # "Emptied" is decided by the REBUILD OUTPUT (the blobs are the
@@ -991,9 +1150,10 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding") -> None:
     """Incremental HNSW maintenance on the shard-partitioned layout:
-    route the new batch to its ``assign_n`` nearest cells (the SAME
-    mixed-hash sub-shard formula the build uses), rebuild ONLY the
-    touched shards — each rebuild unpickles the shard's graph, merges
+    route the new batch to its ``assign_n`` nearest live cells (the
+    sidecar's frozen centroids, never rewritten; the SAME mixed-hash
+    sub-shard formula the build uses), rebuild ONLY the touched shards,
+    read through their directories alone — each rebuild unpickles the shard's graph, merges
     members with the new rows, and re-runs the deterministic bulk build
     with the shard's own recorded hyperparameters (dim/m/ef from the
     blob, seed + shard) — and dynamic-partition-overwrites just those
@@ -1005,25 +1165,17 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     build's values (they are not persisted per-row). Requires a
     kmeans-sharded index. Probe correctness and untouched-file stability
     are pinned by tests/test_ann.py."""
-    full = spark.read.parquet(path)
-    cent_rows = full.select("shard", "centroid").collect()
-    if any(r["centroid"] is None for r in cent_rows):
-        raise ValueError("hnsw_append_partitioned requires a kmeans-"
-                         "sharded index (hnsw_build(shard_by='kmeans'))")
-    cells: dict[tuple, list[int]] = {}
-    for r in cent_rows:
-        cells.setdefault(tuple(r["centroid"]), []).append(int(r["shard"]))
+    shard_cents, read = _open_layout(spark, path)
+    cells = _cells(shard_cents)
     cell_cents = np.asarray(list(cells), dtype=np.float64)
-    cell_shards = [sorted(v) for v in cells.values()]
-    sub_base = np.asarray([s[0] for s in cell_shards])
-    n_sub = np.asarray([len(s) for s in cell_shards])
+    shard_table = _shard_table(list(cells.values()))
 
     # route the batch DISTRIBUTED (r7 verdict item 5): the same
     # mapInPandas assign kernel hnsw_build uses — only the tiny
     # (cells × dim) centroid table rides the broadcast; no O(batch)
     # driver collect, symmetric with ivf_append_partitioned.
     an = max(1, min(assign_n, len(cell_cents)))
-    bc = spark.sparkContext.broadcast((cell_cents, sub_base, n_sub))
+    bc = spark.sparkContext.broadcast((cell_cents, shard_table))
     cnorm_route = (cell_cents ** 2).sum(-1)
     route_schema = T.StructType(
         [T.StructField("shard", T.IntegerType())]
@@ -1031,22 +1183,11 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
            for f in new_vectors.select(id_col, vec_col).schema.fields])
 
     def route(batches):
-        C, sb, ns = bc.value
+        C, (table, n_sub) = bc.value
         for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            d = -2.0 * X @ C.T + cnorm_route
-            near = np.argpartition(d, an - 1, axis=1)[:, :an]
-            h = ids.astype(np.uint64)
-            h = (h ^ (h >> np.uint64(33))) * np.uint64(0xFF51AFD7ED558CCD)
-            h = (h ^ (h >> np.uint64(33))) * np.uint64(0xC4CEB9FE1A85EC53)
-            h = (h ^ (h >> np.uint64(33))).astype(np.int64)
-            shards = sb[near] + (h[:, None] % ns[near])
-            out = pdf[[id_col, vec_col]].loc[pdf.index.repeat(an)].copy()
-            out.insert(0, "shard", shards.reshape(-1).astype(np.int32))
-            yield out
+            if not pdf.empty:
+                yield _assign_shards(pdf, id_col, vec_col, C, cnorm_route,
+                                     an, table, n_sub)
 
     new_rows_df = (new_vectors.select(id_col, vec_col)
                    .mapInPandas(route, schema=route_schema)
@@ -1057,8 +1198,7 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     if not touched:
         new_rows_df.unpersist()
         return
-    old_blobs = full.where(F.col("shard").isin(touched)) \
-        .select("shard", "blob", "centroid")
+    old_blobs = read(touched).select("shard", "blob", "centroid")
 
     def rebuild(old_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
         if old_pdf.empty:

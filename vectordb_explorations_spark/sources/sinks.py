@@ -319,6 +319,23 @@ def read_hive_pruned(spark: SparkSession, base_dir: str,
     return reader.parquet(*sorted(prefixes.values()))
 
 
+def hive_partition_values(spark: SparkSession, base_dir: str,
+                          name: str) -> set[str]:
+    """Values of the first-level ``name=value`` directories under
+    ``base_dir`` — one listStatus, no Spark job; empty when
+    ``base_dir`` does not exist. Same raw-suffix contract as
+    ``read_hive_pruned``."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(base_dir)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return set()
+    return {st.getPath().getName().split("=", 1)[1]
+            for st in fs.listStatus(p)
+            if st.isDirectory() and st.getPath().getName().startswith(
+                name + "=")}
+
+
 def hive_leaf_schema(spark: SparkSession, base_dir: str,
                      n_levels: int):
     """The READ-BACK schema of a hive-partitioned table, captured from
